@@ -239,33 +239,15 @@ def penn_to_wordnet(tag: str) -> str | None:
     return None
 
 
-# Suffix-heuristic POS classes on cleaned lowercase tokens (A18). Ordered;
-# first match wins; default is noun — the same default the plain
-# lemmatizer uses, so the POS path strictly refines it.
+# Suffix-heuristic POS classes on cleaned lowercase tokens (A18): adverb,
+# verb, adjective. Ordered; first match wins; a token matching none is a
+# noun and falls through to the plain lemmatizer, so the POS path strictly
+# refines it (see `lemmatize_token_pos_col`).
 POS_SUFFIX_RULES: tuple[tuple[str, str], ...] = (
     ("ly$", "r"),
     ("(ing|ed)$", "v"),
     ("(ous|ive|able|ible|ful|less|ic|ical|al)$", "a"),
 )
-POS_DEFAULT_TAG = "n"
-
-
-def pos_tag_token_col(tok: Column) -> Column:
-    """Heuristic WordNet POS class for one token, as a Column."""
-    expr = None
-    for pat, tag in POS_SUFFIX_RULES:
-        cond = tok.rlike(pat)
-        expr = F.when(cond, F.lit(tag)) if expr is None else expr.when(cond, F.lit(tag))
-    return expr.otherwise(F.lit(POS_DEFAULT_TAG))
-
-
-def pos_tag_sql(expr: str) -> str:
-    """The same POS heuristic as ANSI SQL."""
-    parts = ["CASE"]
-    for pat, tag in POS_SUFFIX_RULES:
-        parts.append(f"WHEN regexp_matches({expr}, '{pat}') THEN '{tag}'")
-    parts.append(f"ELSE '{POS_DEFAULT_TAG}' END")
-    return " ".join(parts)
 
 
 # Irregular verb forms (exact match, checked before any suffix rule).
@@ -519,16 +501,3 @@ def keywords_v2(
     toks = tokenize(clean_text(col))
     toks = lemmatize_tokens_pos(toks, use_nltk=use_nltk)
     return F.array_except(toks, F.array(*[F.lit(w) for w in stopwords]))
-
-
-def keywords_sql(expr: str, stopwords: Sequence[str] = STOPWORDS) -> tuple[str, str]:
-    """DuckDB mirror pieces for the keyword pipeline.
-
-    Returns (tokens_expr, stopword_in_list): the caller unnests
-    ``tokens_expr``, filters ``word NOT IN (list)`` and ``word <> ''``,
-    applies `lemma_sql`, then DISTINCTs — SQL's long-format equivalent of
-    the array pipeline.
-    """
-    tokens = f"string_split_regex({clean_text_sql(expr)}, '\\s+')"
-    in_list = ", ".join(f"'{w}'" for w in stopwords)
-    return tokens, in_list

@@ -209,64 +209,6 @@ def minhash_band_keys(shingle_df: DataFrame, id_col: str = "doc_id") -> DataFram
     )
 
 
-def minhash_band_keys_rowwise(
-    df: DataFrame, text_col: str = "text", id_col: str = "doc_id"
-) -> DataFrame:
-    """Shuffle-free banded MinHash: same arithmetic as
-    `minhash_band_keys`, computed per row with higher-order array
-    functions instead of explode + groupBy.
-
-    shingles → md5 per shingle (once) → (h1, h2) structs → 16
-    `array_min(transform(...))` passes → stack into band rows. No
-    explode, no aggregation shuffle. MIN is duplicate-insensitive, so
-    skipping per-doc shingle dedup is exact; docs with < SHINGLE_K
-    tokens have no shingles and are filtered, matching the exploded
-    form. Each intermediate array is its own projection: `pairs` is
-    referenced 16 times, which stops CollapseProject from inlining (and
-    re-evaluating) the md5 pass.
-
-    MEASURED (sf0.1, 5000 docs / 261k shingles, local[32]): this form
-    runs ~2.0s vs ~1.45s for the explode+groupBy form — higher-order
-    lambdas are interpreted, while explode + hash-agg is whole-stage
-    codegen'd, and the agg's map-side partial MIN means the shuffle is
-    only ONE 16-long signature row per doc either way. The codegen'd
-    form therefore stays the default at every scale; this variant is
-    kept as the zero-shuffle alternative (and as the counter-example:
-    "fewer shuffles" lost to "stay inside codegen" here).
-    """
-    shingles = F.expr(
-        "filter(zip_with(zip_with(toks, slice(toks, 2, greatest(size(toks) - 1, 0)), "
-        "(x, y) -> concat(x, ' ', y)), slice(toks, 3, greatest(size(toks) - 2, 0)), "
-        "(xy, z) -> concat(xy, ' ', z)), s -> s IS NOT NULL)"
-    )
-    pairs = F.expr(
-        "transform(transform(shingles, s -> md5(s)), "
-        "h -> named_struct('a', CAST(conv(substr(h, 1, 8), 16, 10) AS BIGINT), "
-        "'b', CAST(conv(substr(h, 9, 8), 16, 10) AS BIGINT)))"
-    )
-    mins = [
-        F.expr(
-            f"array_min(transform(pairs, p -> (p.a + {i} * p.b) % {_MERSENNE}))"
-        ).alias(f"m{i}")
-        for i in range(N_MINHASHES)
-    ]
-    stack_args = ", ".join(
-        f"{b}, concat_ws('|', {', '.join(f'm{b * BAND_SIZE + r}' for r in range(BAND_SIZE))})"
-        for b in range(N_BANDS)
-    )
-    return (
-        df.select(id_col, tokens_col(F.col(text_col)).alias("toks"))
-        .select(id_col, shingles.alias("shingles"))
-        .filter(F.size("shingles") > 0)
-        .select(id_col, pairs.alias("pairs"))
-        .select(id_col, *mins)
-        .select(
-            id_col,
-            F.expr(f"stack({N_BANDS}, {stack_args}) AS (band_id, band_key)"),
-        )
-    )
-
-
 def _minhash_sig_sql() -> str:
     aggs = ", ".join(
         f"min((h1 + {i} * h2) % {_MERSENNE}) AS m{i}" for i in range(N_MINHASHES)

@@ -17,8 +17,6 @@ oracle accumulate identically (same element order, same width).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
@@ -190,6 +188,23 @@ TILE_TARGET_ROWS = 2500  # rows per GEMM block: tile <= 2500^2 * 8B = 50 MB
 # (measured: expression wins at sf1's 20k rows, GEMM wins 2.2-2.7x at
 # sf20's 400k; the linear models cross near ~32k — 64k keeps a margin).
 GEMM_MIN_ROWS = 65536
+
+# Long.MaxValue: the size Catalyst reports for a leaf with no statistics
+# (an RDD-backed in-memory frame).
+_UNKNOWN_SIZE = (1 << 63) - 1
+
+
+def estimate_rows(emb: DataFrame) -> int:
+    """Embedding-row estimate from Catalyst's size statistic — NO job (a
+    count() here measured 0.12 s, the whole dispatch margin at small
+    sf), and no filesystem call, so any storage scheme works. For a
+    parquet scan the statistic is the files' byte sum; embedding rows
+    are ~256-310 parquet bytes (64 float32 + ids; float arrays barely
+    compress), so bytes/256 over-estimates slightly — harmless: the
+    estimate only picks an exact branch and sizes chunks. A frame of
+    unknown size counts as 0 rows."""
+    size = int(emb._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
+    return 0 if size >= _UNKNOWN_SIZE else size // 256
 
 
 def topk_pairs_blocked(
@@ -602,18 +617,7 @@ def topk_per_query_gemm(
     qblock = emb.where(F.col(id_col) < q_n).select(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("_qe")
     )
-    # Size estimate from file metadata — NO job (a count() here measured
-    # 0.12 s, the whole dispatch margin at small sf). Embedding rows are
-    # ~256-310 parquet bytes (64 float32 + ids; float arrays barely
-    # compress), so bytes/256 over-estimates slightly — harmless: the
-    # estimate only picks the branch and sizes chunks, both branches are
-    # exact, and P only moves task granularity.
-    files = emb.inputFiles()
-    nc = (
-        sum(os.path.getsize(f.removeprefix("file:")) for f in files) // 256
-        if files
-        else 0
-    )
+    nc = estimate_rows(emb)
     if nc < GEMM_MIN_ROWS:
         # Definitional expression form for small corpora: the Python
         # crossing's fixed cost exceeds the whole n·q codegen arithmetic

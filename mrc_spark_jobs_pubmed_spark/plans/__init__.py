@@ -1,7 +1,9 @@
 """Named-query registry — the engine's declared, oracle-checked surface.
 
 Importing this package registers every query module. `all_queries()` /
-`all_oracles()` feed the driver contract in `__spark_entry__.py`.
+`all_oracles()` feed the driver contract in `__spark_entry__.py`, in
+registration order: the module imports below, then definition order
+within each module.
 """
 
 from mrc_spark_jobs_pubmed_spark.plans.registry import (  # noqa: F401
@@ -10,7 +12,6 @@ from mrc_spark_jobs_pubmed_spark.plans.registry import (  # noqa: F401
     all_queries,
     get,
     register,
-    set_priority,
 )
 
 # Register all query modules (import side effects).
@@ -30,185 +31,3 @@ from mrc_spark_jobs_pubmed_spark.plans import (  # noqa: F401,E402
     timeseries_queries,
     tpch_more_queries,
 )
-
-# ---------------------------------------------------------------------------
-# Driver rotation window (round 5+): DERIVED, not hand-maintained.
-#
-# The round driver writes official CORRECTNESS rows for only the first
-# ~50 entries of queries(), in order. Round 4 shipped with five
-# registered queries missing from the hand-kept window list (the policy
-# test caught it, after the fact). The structural fix: DRIVER_WINDOW is
-# now computed at import time as
-#
-#     every registered query WITHOUT an official row in any committed
-#     CORRECTNESS_r*.json, ordered by the curated queue below first
-#     (r4a batch leads: stateful streaming, graph ML, time-series),
-#     then registration order for anything new.
-#
-# A newly register()-ed query therefore lands in the window
-# automatically; nothing can fall out of the rotation bookkeeping again.
-# Queries that already have an official green row sort after the window
-# in registration order (full surface stays registered).
-# ---------------------------------------------------------------------------
-import glob as _glob
-import json as _json
-import os as _os
-
-# Curated rotation order for the 95 queries that had no official row
-# after r4 (VERDICT r4 item 1). First 50 = the r5 driver window; the
-# tail is next-in-line for r6.
-_ROTATION_QUEUE: list[str] = [
-    "stream_stateful_sessions",
-    "graph_bfs_levels",
-    "sim_mips_topk",
-    "emb_matryoshka_recall",
-    "corpus_rag_chunks",
-    "rel_gap_fill_interpolate",
-    "rel_ts_anomaly_mad",
-    "rel_time_weighted_avg",
-    "rel_concurrency_sweep",
-    "rel_ts_downsample_m4",
-    "rel_markov_transitions",
-    "dedup_simhash_stats",
-    "stream_cdc_apply",
-    "corpus_dsir_weights",
-    "ta_tokenizer_fertility",
-    "graph_label_propagation",
-    "rel_multitouch_attribution",
-    "corpus_k_anonymity",
-    "rel_ts_correlation",
-    "rel_new_users_daily",
-    "rel_rfm_segmentation",
-    "graph_kcore",
-    "ta_langid_confusion",
-    "emb_label_centroid_drift",
-    "graph_link_prediction",
-    "rel_histogram_equidepth",
-    "rel_heartbeat_gaps",
-    "ta_code_detection",
-    "sim_ivf_nprobe_recall",
-    "dedup_sorted_neighborhood",
-    "mm_binary_dedup",
-    "rel_out_of_order_metrics",
-    "rel_scd2_point_in_time",
-    "rel_funnel_latency",
-    "emb_cluster_purity",
-    "dedup_cluster_stats",
-    "corpus_vocab_coverage",
-    "emb_knn_label_eval",
-    "rel_active_users_rolling",
-    "rel_revenue_pareto",
-    "rel_basket_lift",
-    "graph_degree_distribution",
-    "dedup_jaccard_histogram",
-    "rel_ab_test_eval",
-    "rel_ts_seasonal_profile",
-    "corpus_datacard_by_source",
-    "rel_cohort_ltv",
-    "dedup_banding_tradeoff",
-    "graph_hierarchy_depth",
-    "rel_ewma_smoothing",
-    "rel_bitmap_distinct",
-    "rel_item_item_cf",
-    "rel_budget_allocation",
-    "graph_weighted_sssp",
-    "graph_modularity",
-    "text_textrank_keywords",
-    "mm_phash_neardup",
-    "emb_dim_variance",
-    "corpus_prefix_dup",
-    "rel_gaps_islands",
-    "graph_assortativity",
-    "dedup_minhash_estimate",
-    "sim_range_search",
-    "rel_join_skew_profile",
-    "corpus_snapshot_diff",
-    "rel_path_analysis",
-    "graph_bom_explosion",
-    "rel_waterfall_bridge",
-    "rel_fifo_matching",
-    "corpus_blocklist_filter",
-    "rel_asof_nearest",
-    "sim_filtered_topk",
-    "rel_benford_audit",
-    "mm_scene_detection",
-    "corpus_source_overlap",
-    "corpus_pps_sample",
-    "rel_cusum_changepoint",
-    "rel_survival_curve",
-    "text_mi_feature_ranking",
-    "rel_hll_partial_merge",
-    "corpus_quality_threshold_sweep",
-    "rel_receivables_aging",
-    "sim_batch_topk",
-    "rel_forecast_backtest",
-    "text_template_dedup",
-    "sim_rrf_fusion",
-    "mm_aspect_bucket",
-    "rel_ols_trend",
-    "rel_winsorized_stats",
-    "graph_random_walk",
-    "rel_abc_classification",
-    "emb_clip_calibration",
-    "sim_retrieval_metrics",
-    "text_phrase_search",
-    "rel_latency_slo_bands",
-]
-
-
-def _row_is_green(row: object) -> bool:
-    """An official row only counts if it PASSED (VERDICT r5 item 2).
-
-    A red row (mismatch or error) must re-enter the rotation so the
-    driver retests it, rather than silently leaving the window forever.
-    Non-dict rows (malformed artifact) are treated as red for the same
-    reason.
-    """
-    if not isinstance(row, dict):
-        return False
-    return bool(
-        row.get("rows_match")
-        and row.get("schema_match")
-        and row.get("hash_match", True)  # rows-only checks omit hash
-        and not row.get("err")
-    )
-
-
-def _official_rows() -> set[str]:
-    """Names with at least one official GREEN CORRECTNESS row (any round)."""
-    repo = _os.path.dirname(_os.path.dirname(_os.path.dirname(_os.path.abspath(__file__))))
-    seen: set[str] = set()
-    for p in sorted(_glob.glob(_os.path.join(repo, "CORRECTNESS_r*.json"))):
-        try:
-            with open(p) as f:
-                data = _json.load(f)
-        except (OSError, ValueError):  # pragma: no cover - unreadable artifact
-            continue
-        if not isinstance(data, dict):
-            continue
-        seen.update(name for name, row in data.items() if _row_is_green(row))
-    return seen
-
-
-# Rows the r5 verdict asked to LEAD the r6 window (perf-history carriers:
-# the hard signal should confirm the recorded fixes first).
-_WINDOW_LEAD: list[str] = [
-    "sim_range_search",
-    "emb_hard_negative_mining",
-    "graph_weighted_sssp",
-    "rel_queue_wait_lindley",
-    "dedup_minhash_estimate",
-]
-
-
-def _derive_window() -> list[str]:
-    official = _official_rows()
-    names = list(all_queries())
-    window = [n for n in _WINDOW_LEAD if n not in official]
-    window += [n for n in _ROTATION_QUEUE if n not in official and n not in set(window)]
-    window += [n for n in names if n not in official and n not in set(window)]
-    return window
-
-
-DRIVER_WINDOW: list[str] = _derive_window()
-set_priority(DRIVER_WINDOW)

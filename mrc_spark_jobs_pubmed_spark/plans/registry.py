@@ -40,26 +40,6 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
     return deco
 
 
-def set_priority(names: list[str]) -> None:
-    """Reorder the registry so `names` come first (then registration order).
-
-    The round driver writes CORRECTNESS rows for only the first ~50
-    entries of `queries()`, in order. r01 cut alphabetical-module order
-    after 50, leaving text_*/sim_*/stream_* and the second TPC-H batch
-    with no official row; this hook puts a curated, family-complete
-    window first. Unknown names are an error (catches typos when
-    queries are renamed).
-    """
-    global _REGISTRY
-    unknown = [n for n in names if n not in _REGISTRY]
-    if unknown:
-        raise KeyError(f"set_priority: unknown query names {unknown}")
-    ordered = {n: _REGISTRY[n] for n in names}
-    for n, q in _REGISTRY.items():
-        ordered.setdefault(n, q)
-    _REGISTRY = ordered
-
-
 def get(name: str) -> Query:
     return _REGISTRY[name]
 

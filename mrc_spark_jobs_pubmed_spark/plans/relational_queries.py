@@ -1000,9 +1000,12 @@ def rel_q18_big_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     # (sf20 A/B 10.5 -> 9.5 s; the remaining cost is the 120M-row qty
     # aggregate, which defines the query). r10: big (the qty>250 tail,
     # 457k rows at sf20) is a lineitem-derived slice — linear in the
-    # corpus — so its forced broadcast is dropped per the q4 precedent;
-    # AQE broadcasts it adaptively while it fits and shuffle-joins
-    # beyond the 8 GiB cap.
+    # corpus — so it is never force-broadcast (the q4 precedent). r11:
+    # it is the SHUFFLE_HASH build side of the orders join — a
+    # scale-invariant ~1.5% of the orders side's bytes per partition,
+    # so the hash build stays partition-bounded at any corpus size, and
+    # skipping the orders-side SMJ sort won ~8% at sf20
+    # (AB_r11_q18_sf20.json).
     top = (
         orders.join(big.hint("shuffle_hash"), orders.o_orderkey == big.l_orderkey)
         .select(

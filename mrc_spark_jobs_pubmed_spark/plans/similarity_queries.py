@@ -2502,8 +2502,6 @@ FROM per_q p JOIN lab l ON l.label = p.qlabel
     "broadcast.",
 )
 def sim_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import os as _os
-
     from pyspark.sql import Window
 
     emb = load_table(spark, "embeddings", sf_dir)
@@ -2529,13 +2527,7 @@ def sim_retrieval_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     # same-session crossover bracket (AB_r11_rm_sf1.json): inline wins
     # at 200k rows (sf1 1.22 vs 1.61 s), GEMM wins at 4M (sf20 1.97 vs
     # 7.36 s); 2^20 sits at the bracket's geometric middle.
-    files = emb.inputFiles()
-    nc = (
-        sum(_os.path.getsize(f.removeprefix("file:")) for f in files) // 256
-        if files
-        else 0
-    )
-    if nc >= RM_GEMM_MIN_ROWS:
+    if S.estimate_rows(emb) >= RM_GEMM_MIN_ROWS:
         ranked = S.topk_per_query_gemm(emb, RM_Q_N, RM_K)
         qlab = emb.where(F.col("vec_id") < RM_Q_N).select(
             F.col("vec_id").alias("_qid"), F.col("label").alias("qlabel")

@@ -1009,9 +1009,16 @@ LIMIT 20
     "pairs-aggregate stage alone was 11.1 s of the 13.0.",
 )
 def rel_q21_waiting_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    li = load_table(spark, "lineitem", sf_dir)
-    orders = load_table(spark, "orders", sf_dir)
-    supp = load_table(spark, "supplier", sf_dir)
+    return waiting_suppliers(
+        load_table(spark, "lineitem", sf_dir),
+        load_table(spark, "orders", sf_dir),
+        load_table(spark, "supplier", sf_dir),
+    )
+
+
+def waiting_suppliers(li: DataFrame, orders: DataFrame, supp: DataFrame) -> DataFrame:
+    """rel_q21's plan over any (lineitem, orders, supplier) frames, so
+    tests can run the shipped form on branch-boundary fixtures."""
     # one lineitem pass: distinct (order, supplier) pairs with a late
     # flag. (order, supplier) is near-unique in TPC-H-shaped lineitem
     # (119.76M pairs / 120M rows at sf20), so a straight two-level agg

@@ -61,11 +61,17 @@ def _dp_identity(row: dict) -> dict | None:
 def main() -> int:
     check_only = "--check" in sys.argv[1:]
     idx = json.load(open(os.path.join(ROOT, "PERF_INDEX.json")))
-    pins: dict[str, dict] = {}
-    if os.path.exists(PINS_PATH):
-        pins = json.load(open(PINS_PATH)).get("pins", {})
+    doc: dict = json.load(open(PINS_PATH)) if os.path.exists(PINS_PATH) else {}
+    pins: dict[str, dict] = doc.get("pins", {})
+    # Plans that read the session's parallelism (range() renders
+    # splits=Some(defaultParallelism)) fingerprint differently per core
+    # count, so every run uses the local[N] the pins were taken under;
+    # a fresh pins file records the core count of the run that wrote it.
+    cpus = int(doc.get("cpus") or os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
-    spark = get_session(app_name="plan-fp-snapshot", shuffle_partitions=8)
+    spark = get_session(
+        app_name="plan-fp-snapshot", master=f"local[{cpus}]", shuffle_partitions=8
+    )
     current = fingerprint_registry(spark, FP_SF_DIR)
 
     if check_only:
@@ -115,6 +121,7 @@ def main() -> int:
         json.dump(
             {
                 "sf_dir": FP_SF_DIR,
+                "cpus": cpus,
                 "policy": "pin updates ONLY on datapoint change; a replan "
                 "keeps the old pin until the query is re-measured",
                 "pins": out,

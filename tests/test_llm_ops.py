@@ -90,19 +90,6 @@ def test_fingerprint_normalization_invariance(spark):
     assert len(fp[1]) == 16
 
 
-def test_minhash_rowwise_matches_grouped_form(spark):
-    # the zero-shuffle HOF variant must be value-identical to the
-    # codegen'd explode+groupBy default on real fixture data
-    from mrc_spark_jobs_pubmed_spark.sources.catalog import load_table
-
-    docs = load_table(spark, "documents", "/root/testdata/sf0.001")
-    grouped = D.minhash_band_keys(D.shingle_rows(docs, distinct=False))
-    rowwise = D.minhash_band_keys_rowwise(docs)
-    assert {tuple(r) for r in grouped.collect()} == {
-        tuple(r) for r in rowwise.collect()
-    }
-
-
 def test_salted_join_matches_plain_join(spark):
     from mrc_spark_jobs_pubmed_spark.operators import skew
 

@@ -57,33 +57,6 @@ def test_query_matches_oracle(spark, duck, name):
     )
 
 
-def test_driver_window_is_derived_from_official_rows():
-    """Round-5 structural fix (VERDICT r4 item 1): DRIVER_WINDOW is
-    derived — exactly the set of registered queries with NO official
-    CORRECTNESS_r*.json row, in curated-queue-then-registration order,
-    and queries() leads with it. A new register() call lands in the
-    window automatically; a hand-edit that drops a never-official query
-    fails here."""
-    official = plans._official_rows()
-    names = list(plans.all_queries())
-
-    never_official = [n for n in names if n not in official]
-    assert set(plans.DRIVER_WINDOW) == set(never_official), (
-        "window/never-official divergence: "
-        f"missing={sorted(set(never_official) - set(plans.DRIVER_WINDOW))} "
-        f"stale={sorted(set(plans.DRIVER_WINDOW) - set(never_official))}"
-    )
-    # the driver samples the first ~50 of queries(): the window must be
-    # the registry prefix, duplicate-free
-    assert names[: len(plans.DRIVER_WINDOW)] == plans.DRIVER_WINDOW
-    assert len(set(plans.DRIVER_WINDOW)) == len(plans.DRIVER_WINDOW)
-    # curated queue entries must all still exist (catches renames)
-    assert not [n for n in plans._ROTATION_QUEUE if n not in names]
-    # verdict-r5 lead rows head the window (when still unofficial)
-    lead = [n for n in plans._WINDOW_LEAD if n not in official]
-    assert plans.DRIVER_WINDOW[: len(lead)] == lead
-
-
 def test_survey_rows_all_backed():
     """VERDICT r5 item 7: every SURVEY.md §2 row must map to >=1 registered
     query (or an existing pytest file, for sink/source/streaming-twin
@@ -126,40 +99,3 @@ def test_survey_rows_all_backed():
     # map hygiene: no stale entries for rows that left the survey
     stale = [k for k in SURVEY_MAP if k not in set(rows)]
     assert not stale, f"survey_map entries with no SURVEY §2 row: {stale}"
-
-
-def test_official_rows_count_only_green(tmp_path, monkeypatch):
-    """VERDICT r5 item 2: a RED official row must NOT count as official —
-    the query has to re-enter the rotation for an official retest instead
-    of silently leaving the window forever. Synthetic red-row fixture."""
-    import json
-
-    green = {"rows_match": True, "schema_match": True, "hash_match": True,
-             "spark_rows": 1, "oracle_rows": 1, "err": None}
-    red_hash = dict(green, hash_match=False)
-    red_rows = dict(green, rows_match=False)
-    red_err = dict(green, err="boom")
-    rows_only_green = {"rows_match": True, "schema_match": True,
-                       "spark_rows": 3, "err": None}  # no hash key: weaker check
-
-    fixture = tmp_path / "CORRECTNESS_r99.json"
-    fixture.write_text(json.dumps({
-        "q_green": green,
-        "q_red_hash": red_hash,
-        "q_red_rows": red_rows,
-        "q_red_err": red_err,
-        "q_rows_only": rows_only_green,
-        "q_malformed": "not-a-dict",
-    }))
-
-    monkeypatch.setattr(plans._glob, "glob", lambda pat: [str(fixture)])
-    seen = plans._official_rows()
-    assert seen == {"q_green", "q_rows_only"}
-
-    # unit checks on the row predicate itself
-    assert plans._row_is_green(green)
-    assert plans._row_is_green(rows_only_green)
-    assert not plans._row_is_green(red_hash)
-    assert not plans._row_is_green(red_rows)
-    assert not plans._row_is_green(red_err)
-    assert not plans._row_is_green("not-a-dict")

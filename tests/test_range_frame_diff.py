@@ -17,8 +17,7 @@ brute-force per-row reference on a fixture where one customer owns
 ~95% of orders with distinct-second timestamps (the regime where the
 bounded frame is quadratic); (3) same-instant peers all read the full
 peer-group sum, matching RANGE peer semantics. The measured crossover
-vs the bounded-frame plan lives in RANGE_FRAME_AB_r9.json
-(scripts/range_frame_ab.py).
+vs the bounded-frame plan lives in RANGE_FRAME_AB_r9.json.
 """
 
 from __future__ import annotations

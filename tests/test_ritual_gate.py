@@ -3,8 +3,8 @@
 Round 6 shipped two queries (`emb_kmeanspp_init`,
 `rel_interval_coalesce_sharded`) registered AFTER the round-close
 rituals ran, so they appeared in no committed sweep/EXPLAIN/COVERAGE
-artifact. Same defect class as the r4 DRIVER_WINDOW bookkeeping bug:
-a point-in-time snapshot with no structural tie to the registry.
+artifact: a point-in-time snapshot with no structural tie to the
+registry.
 
 This gate makes that impossible: pytest fails until the rituals are
 re-run whenever the registry grows past the newest committed

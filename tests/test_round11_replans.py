@@ -23,6 +23,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
+from mrc_spark_jobs_pubmed_spark.plans.tpch_more_queries import waiting_suppliers
 from mrc_spark_jobs_pubmed_spark.session import get_session
 
 
@@ -60,35 +61,9 @@ def test_q21_one_pass_aggregate_matches_definitional(spark):
          (13, "Supp#13"), (14, "Supp#14")],
         "s_suppkey long, s_name string",
     )
-    # the shipped one-pass shape (mirrors rel_q21_waiting_suppliers)
-    pairs = (
-        li.select(
-            "l_orderkey",
-            "l_suppkey",
-            F.when(F.col("l_returnflag") == "R", 1).otherwise(0).alias("late"),
-        )
-        .repartition("l_orderkey")
-        .groupBy("l_orderkey", "l_suppkey")
-        .agg(F.max("late").alias("late"))
-    )
-    per_order = pairs.groupBy("l_orderkey").agg(
-        F.count("*").alias("n_supp"),
-        F.sum("late").alias("n_late"),
-        F.max(F.when(F.col("late") == 1, F.col("l_suppkey"))).alias("late_supp"),
-    )
-    blamed = per_order.where(
-        (F.col("n_late") == 1) & (F.col("n_supp") >= 2)
-    ).select("l_orderkey", "late_supp")
-    got = sorted(
-        blamed.join(
-            orders.filter(F.col("o_orderstatus") == "F").select("o_orderkey"),
-            blamed.l_orderkey == F.col("o_orderkey"),
-        )
-        .join(supp, F.col("late_supp") == supp.s_suppkey)
-        .groupBy("s_name")
-        .agg(F.count("*").alias("numwait"))
-        .collect()
-    )
+    # the shipped plan itself (early F-order left-semi + SHUFFLE_HASH,
+    # then the one-pass per-order aggregate)
+    got = waiting_suppliers(li, orders, supp).collect()
     assert [(r["s_name"], r["numwait"]) for r in got] == [
         ("Supp#10", 1),  # order 1
         ("Supp#13", 1),  # order 4
@@ -243,11 +218,16 @@ def test_retrieval_metrics_gemm_branch_matches_inline_branch(spark, monkeypatch)
     # only sound because both branches produce identical metric rows —
     # pin that on the real sf0.001 fixture (exercises ties, label
     # joins, and the n_relevant side identically through both paths).
+    from mrc_spark_jobs_pubmed_spark.operators import similarity as S
     from mrc_spark_jobs_pubmed_spark.plans import similarity_queries as SQ
 
     sf_dir = "/root/testdata/sf0.001"
 
+    # both thresholds: the shared stage dispatches again on its own
+    # GEMM_MIN_ROWS, and the fixture is far below it, so without the
+    # second patch this leg would rank with the expression form
     monkeypatch.setattr(SQ, "RM_GEMM_MIN_ROWS", 0)
+    monkeypatch.setattr(S, "GEMM_MIN_ROWS", 0)
     gemm = sorted(
         tuple(r) for r in SQ.sim_retrieval_metrics(spark, sf_dir).collect()
     )
@@ -257,3 +237,33 @@ def test_retrieval_metrics_gemm_branch_matches_inline_branch(spark, monkeypatch)
     )
     assert gemm == inline
     assert len(gemm) > 0
+
+
+def test_estimate_rows_reads_plan_stats_not_local_files(spark, monkeypatch):
+    # the GEMM size dispatch must not assume a local filesystem: the
+    # estimate comes from Catalyst's size statistic, which for a parquet
+    # scan equals the files' byte sum (the old os.path.getsize estimate)
+    import os
+
+    from mrc_spark_jobs_pubmed_spark.operators import similarity as S
+    from mrc_spark_jobs_pubmed_spark.plans import similarity_queries as SQ
+    from mrc_spark_jobs_pubmed_spark.sources.catalog import load_table
+
+    sf_dir = "/root/testdata/sf0.001"
+    emb = load_table(spark, "embeddings", sf_dir)
+    file_bytes = sum(
+        os.path.getsize(f.removeprefix("file:")) for f in emb.inputFiles()
+    )
+    assert S.estimate_rows(emb) == file_bytes // 256 > 0
+    # an RDD-backed in-memory frame has unknown size: 0 rows, as a frame
+    # with no input files always counted
+    mem = spark.createDataFrame(
+        [(0, [0.0] * 64, 0)], "vec_id long, embedding array<float>, label int"
+    )
+    assert S.estimate_rows(mem) == 0
+    # object-store input paths: both dispatch sites still build
+    monkeypatch.setattr(
+        type(emb), "inputFiles", lambda self: ["s3a://bucket/embeddings/part-0.parquet"]
+    )
+    assert S.topk_per_query_gemm(emb, q_n=3, k=5).columns
+    assert SQ.sim_retrieval_metrics(spark, sf_dir).columns
