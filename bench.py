@@ -148,6 +148,7 @@ def main() -> None:
                 "sf": sf,
                 "shared_subtotal": round(sum(times[n] for n in shared), 3),
                 "shared_n": SHARED_N,
+                "cpus": spark.sparkContext.defaultParallelism,
             }
         )
     )

@@ -31,8 +31,6 @@ def run_pipeline(
       reference's exact v2 output contract (
       extract_keywords_from_all_abstracts.py:103: index=False,header=False)
     """
-    sinks.validate(f"{out_dir}/__nonexistent_in__", out_dir)
-
     work = ingest.build_work_table(spark, begin_year, end_year, search)
     pages = ingest.expand_pages(work)
     fetched = ingest.fetch_pages(pages, fetcher)

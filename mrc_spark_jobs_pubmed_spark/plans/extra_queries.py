@@ -13,6 +13,7 @@ from pyspark.sql import types as T
 
 from mrc_spark_jobs_pubmed_spark.plans.registry import register
 from mrc_spark_jobs_pubmed_spark.sources.catalog import load_table
+from mrc_spark_jobs_pubmed_spark.streaming.jobs import ROLL_DAYS  # shared with the streaming twin
 
 
 @register(
@@ -3090,9 +3091,6 @@ def rel_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- rolling exact distinct (bitmap window) ----------------------------------
-
-ROLL_DAYS = 7  # trailing window width, days
-
 
 @register(
     "rel_rolling_distinct_bitmap",

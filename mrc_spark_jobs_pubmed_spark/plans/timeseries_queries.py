@@ -18,6 +18,16 @@ from pyspark.sql import functions as F
 
 from mrc_spark_jobs_pubmed_spark.plans.registry import register
 from mrc_spark_jobs_pubmed_spark.sources.catalog import load_table
+from mrc_spark_jobs_pubmed_spark.streaming.jobs import (  # shared with the streaming twins
+    BURST_BASE_H,
+    BURST_MULT,
+    DOUBLE_FIRE_S,
+    EWMA_K,
+    HB_GAP_S,
+    Q_SVC_PER_U4,
+    RATE_LIMIT_K,
+    RATE_WINDOW_S,
+)
 
 # --- time-weighted average (LOCF) -------------------------------------------
 
@@ -623,9 +633,6 @@ def rel_rfm_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- heartbeat gap detection -------------------------------------------------
 
-HB_GAP_S = 3600  # report silences longer than an hour
-
-
 @register(
     "rel_heartbeat_gaps",
     oracle=f"""
@@ -1112,9 +1119,6 @@ def rel_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- exact dyadic EWMA ------------------------------------------------------
-
-EWMA_K = 8  # truncation depth; alpha = 1/2 => weight 2^(K-1-i) for lag i
-
 
 def _ewma_terms(dialect: str) -> tuple[str, str]:
     """(numerator, denominator) SQL over lag columns g0..g{K-1}.
@@ -1653,10 +1657,6 @@ def rel_latency_slo_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- burst detection (trailing-baseline ratio) -------------------------------
 
-BURST_MULT = 3  # burst when hourly count > 3x the trailing-24h average
-BURST_BASE_H = 24
-
-
 @register(
     "rel_burst_detection",
     oracle=f"""
@@ -1819,9 +1819,6 @@ def rel_seasonality_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- duplicate-fire (rapid-repeat) detection ---------------------------------
-
-DOUBLE_FIRE_S = 300  # same user+type within 300 s = suspected double fire
-
 
 @register(
     "rel_double_fire_events",
@@ -2035,10 +2032,6 @@ def rel_interval_overlap_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- sliding-window rate-limit audit ------------------------------------------
-
-RATE_WINDOW_S = 43200  # 12 h sliding window
-RATE_LIMIT_K = 2  # allow K events per window per user
-
 
 @register(
     "rel_rate_limit_audit",
@@ -2256,9 +2249,6 @@ def rel_rolling_median(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # --- queueing delay via the Lindley running-min identity ------------------------
-
-Q_SVC_PER_U4 = 100  # service microseconds per 1e-4 value unit
-
 
 @register(
     "rel_queue_wait_lindley",

@@ -241,7 +241,7 @@ def _freshness_token(path: str) -> tuple[int, float]:
 # at sf1 (5.8 MB) fan-out wins 4-8x. Compressed bytes is the only
 # cheap static proxy for per-row CPU volume; at production scale every
 # table clears this by orders of magnitude (and is wide anyway).
-FAN_OUT_MIN_BYTES = int(os.environ.get("SPARK_GRAFT_FAN_OUT_MIN_BYTES", 4 << 20))
+FAN_OUT_MIN_BYTES = 4 << 20
 
 
 def _scan_bytes(path: str) -> int:

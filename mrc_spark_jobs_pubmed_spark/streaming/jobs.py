@@ -724,8 +724,8 @@ def run_cdc_apply_to_files(
 
 # --- streaming heartbeat-gap detection --------------------------------------
 
-HEARTBEAT_GAP_S = 3600  # mirror of plans.timeseries_queries.HB_GAP_S
-_HB_GAP_US = HEARTBEAT_GAP_S * 1_000_000
+HB_GAP_S = 3600  # report silences longer than an hour
+_HB_GAP_US = HB_GAP_S * 1_000_000
 
 
 def stateful_heartbeat_gaps(events: DataFrame) -> DataFrame:
@@ -875,7 +875,7 @@ def run_bitmap_distinct_to_files(
 
 # --- streaming EWMA (arbitrary state: bounded value history) ----------------
 
-_EWMA_K = 8  # mirror of plans.timeseries_queries.EWMA_K
+EWMA_K = 8  # truncation depth; alpha = 1/2 => weight 2^(K-1-i) for lag i
 
 
 def stateful_ewma(events: DataFrame) -> DataFrame:
@@ -926,7 +926,7 @@ def stateful_ewma(events: DataFrame) -> DataFrame:
         else:
             n, vals = 0, []
         n += len(new_vals)
-        vals = (vals + new_vals)[-_EWMA_K:]
+        vals = (vals + new_vals)[-EWMA_K:]
         # batch form: sum_lag v_lag * 2^(K-1-lag) / sum_lag 2^(K-1-lag);
         # the common factor 2^(K-m) divides numerator and denominator
         # exactly, so with oldest-first index i (lag = m-1-i) this
@@ -955,7 +955,7 @@ def stateful_ewma(events: DataFrame) -> DataFrame:
     )
 
 
-ROLL_DAYS = 7  # mirror of plans.extra_queries.ROLL_DAYS
+ROLL_DAYS = 7  # trailing window width, days
 
 
 def rolling_distinct_rollup(words: DataFrame) -> DataFrame:
@@ -1032,7 +1032,7 @@ def run_rolling_distinct_to_files(
 
 # --- streaming double-fire detection (arbitrary state) ------------------------
 
-DOUBLE_FIRE_S = 300  # mirror of plans.timeseries_queries.DOUBLE_FIRE_S
+DOUBLE_FIRE_S = 300  # same user+type within 300 s = suspected double fire
 _DF_GAP_US = DOUBLE_FIRE_S * 1_000_000
 
 
@@ -1139,8 +1139,8 @@ def stateful_double_fire(
 
 # --- streaming sliding-window rate limiter (arbitrary state) -------------------
 
-RATE_WINDOW_S = 43200  # mirror of plans.timeseries_queries.RATE_WINDOW_S
-RATE_LIMIT_K = 2
+RATE_WINDOW_S = 43200  # 12 h sliding window
+RATE_LIMIT_K = 2  # allow K events per window per user
 
 
 def stateful_rate_limit(
@@ -1259,7 +1259,7 @@ def stateful_rate_limit(
 
 # --- streaming burst detection (arbitrary state) -------------------------------
 
-BURST_MULT = 3  # mirrors plans.timeseries_queries.BURST_MULT
+BURST_MULT = 3  # burst when hourly count > 3x the trailing-24h average
 BURST_BASE_H = 24
 _HOUR_US = 3_600_000_000
 
@@ -1350,7 +1350,7 @@ def stateful_burst_detection(
 
 # --- streaming queueing delay (arbitrary state, O(1) per key) -------------------
 
-Q_SVC_PER_U4 = 100  # mirrors plans.timeseries_queries.Q_SVC_PER_U4
+Q_SVC_PER_U4 = 100  # service microseconds per 1e-4 value unit
 
 
 def stateful_queue_wait(

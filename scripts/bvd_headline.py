@@ -29,12 +29,9 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."
 import duckdb  # noqa: E402
 
 from bench import HEADLINE, SF_DIR, SHARED_N  # noqa: E402
-from mrc_spark_jobs_pubmed_spark import plans  # noqa: E402
+from mrc_spark_jobs_pubmed_spark import oracle, plans  # noqa: E402
 from mrc_spark_jobs_pubmed_spark.session import get_session  # noqa: E402
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "5"))
 
 
@@ -43,12 +40,7 @@ def main() -> None:
         app_name="bvd-headline",
         extra_conf={"spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m"},
     )
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle.duck_views(duckdb.connect(), SF_DIR)
     registry = plans.all_queries()
 
     out: dict[str, dict[str, float]] = {}

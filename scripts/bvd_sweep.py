@@ -1,8 +1,8 @@
 """Incremental Spark-vs-DuckDB sweep for the PERF evidence index.
 
-Same timing contract as scripts/bench_vs_duckdb.py (warm + timed run per
-side, noop sink on the Spark side, fetchall on DuckDB) but built for
-LONG unattended sweeps: results append to a JSONL file as they land
+Timing contract: a warm run then one timed run per side, the Spark plan
+built and written to a noop sink, the DuckDB oracle SQL fetched in full.
+Built for LONG unattended sweeps: results append to a JSONL file as they land
 (crash-safe — a killed run keeps everything measured so far), names
 already present in the JSONL are skipped on restart, and a per-query
 exception is recorded instead of aborting the sweep.
@@ -28,12 +28,9 @@ import duckdb
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 from bench import SF_DIR  # noqa: E402
-from mrc_spark_jobs_pubmed_spark import plans  # noqa: E402
+from mrc_spark_jobs_pubmed_spark import oracle, plans  # noqa: E402
 from mrc_spark_jobs_pubmed_spark.session import get_session  # noqa: E402
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 
 def merge(jsonl: str, out: str) -> None:
@@ -153,11 +150,7 @@ def main() -> None:
         )
     if os.environ.get("BVD_DUCK_MEM"):
         con.execute(f"SET memory_limit='{os.environ['BVD_DUCK_MEM']}'")
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    oracle.duck_views(con, SF_DIR)
     registry = plans.all_queries()
     with open(out_path, "a") as f:
         for i, name in enumerate(todo):

@@ -2,10 +2,10 @@
 
 1. smoke: entry(spark) at sf0.001 → rows > 0, stable schema
 2. correctness: each queries()[name] at sf0.01 vs oracle_sql()[name] in
-   DuckDB (views pre-registered) — row count + sorted column names +
-   order-insensitive value comparison + dtype-KIND parity, all derived
-   from ONE execution per engine (r4 ADVICE: the old collect()-then-
-   toPandas() flow ran every query twice).
+   DuckDB (views pre-registered), judged by `oracle.compare` — the same
+   contract tests/test_oracle.py asserts: sorted column names, row
+   count, dtype-KIND parity, no unhashable cells, order-insensitive
+   values at 6 dp, all from ONE execution per engine.
 3. codegen guard (r4 verdict item 2): the JVM's stderr is captured at
    the file-descriptor level for the whole run; any
    `CodeGenerator ... Failed to compile` / `Code grows beyond 64 KB`
@@ -17,68 +17,21 @@ Usage: python scripts/driver_check.py [name ...]
 
 from __future__ import annotations
 
-import datetime
-import decimal
-import math
 import os
 import re
 import sys
 import time
 
 import duckdb
-import numpy as np
-import pandas as pd
 
 sys.path.insert(0, ".")
 
-SF_SMOKE = "/root/testdata/sf0.001"
 # override to replay the oracle sweep at another scale (e.g. the
 # regenerated testdata/sf1) — correctness should hold at every sf
 SF_ORACLE = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
 JVM_LOG = os.environ.get("SPARK_GRAFT_JVM_LOG", "/tmp/spark_graft_jvm_stderr.log")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 
 _CODEGEN_FAIL = re.compile(r"Failed to compile the generated|grows beyond 64 KB")
-
-
-def norm(v):
-    """Canonical scalar: mirrors the driver's pandas-based compare."""
-    if v is None or v is pd.NaT:
-        return None
-    if isinstance(v, (float, np.floating)):
-        f = float(v)
-        return "nan" if math.isnan(f) else round(f, 6)
-    if isinstance(v, (bool, np.bool_)):
-        return bool(v)
-    if isinstance(v, (int, np.integer)):
-        return int(v)
-    if isinstance(v, decimal.Decimal):
-        return round(float(v), 6)
-    if isinstance(v, (pd.Timestamp, datetime.datetime, datetime.date)):
-        return str(v)[:26]
-    if isinstance(v, (bytes, bytearray)):
-        return bytes(v)
-    if isinstance(v, (list, tuple, np.ndarray)):
-        return tuple(norm(x) for x in v)
-    if isinstance(v, dict):
-        return tuple(sorted((k, norm(x)) for k, x in v.items()))
-    try:
-        if pd.isna(v):
-            return None
-    except (TypeError, ValueError):
-        pass
-    return v
-
-
-def canon(pdf: pd.DataFrame):
-    cols = sorted(pdf.columns)
-    out = [
-        tuple(norm(v) for v in row)
-        for row in pdf[cols].itertuples(index=False, name=None)
-    ]
-    return sorted(out, key=repr)
 
 
 def main() -> int:
@@ -93,6 +46,8 @@ def main() -> int:
     os.dup2(jvm_log.fileno(), 2)
     try:
         import __spark_entry__ as entrymod
+        from mrc_spark_jobs_pubmed_spark import oracle
+        from mrc_spark_jobs_pubmed_spark.plans import Query
         from mrc_spark_jobs_pubmed_spark.session import get_session
 
         spark = get_session(app_name="driver-check", shuffle_partitions=8)
@@ -111,62 +66,22 @@ def main() -> int:
     extra = set(oracles) - set(qs)
     assert not extra, f"oracle_sql keys not in queries: {extra}"
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_ORACLE}/{t}.parquet')"
-        )
-
+    con = oracle.duck_views(duckdb.connect(), SF_ORACLE)
     n_pass = n_fail = 0
     for name, fn in sorted(qs.items()):
         if only and name not in only:
             continue
         t0 = time.time()
         try:
-            sdf = fn(spark, SF_ORACLE)
-            spdf = sdf.toPandas()  # ONE spark execution: values + dtypes
-            scols = list(spdf.columns)
-            if name not in oracles:
-                print(f"  ROWS-ONLY {name}: {len(spdf)} rows ({time.time()-t0:.1f}s)")
-                n_pass += 1
-                continue
-            dpdf = con.execute(oracles[name]).df()  # ONE duckdb execution
-            dcols = list(dpdf.columns)
-            ok_cols = sorted(scols) == sorted(dcols)
-            ok_count = len(spdf) == len(dpdf)
-            ok_vals = ok_cols and ok_count and canon(spdf) == canon(dpdf)
-            # dtype parity mirrors the DRIVER's type-sensitive pandas
-            # canonicalizer: identical VALUES still hash-mismatch when
-            # e.g. a DuckDB HUGEINT sum lands as float64 against
-            # Spark's int64 — the root cause of all four r3 red rows,
-            # invisible to a value-only compare. KIND-level compare
-            # (width int32/int64 and unit ns/us hash fine; int-vs-float
-            # or object-vs-datetime64 do not).
-            ok_dtype = True
-            dtype_msg = "ok"
-            if ok_cols:
-                sdt, ddt = spdf.dtypes, dpdf.dtypes
-                bad = [
-                    f"{c}: spark={sdt[c]} duckdb={ddt[c]}"
-                    for c in scols
-                    if sdt[c].kind != ddt[c].kind
-                ]
-                if bad:
-                    ok_dtype = False
-                    dtype_msg = "; ".join(bad)
-            status = "PASS" if (ok_cols and ok_count and ok_vals and ok_dtype) else "FAIL"
-            print(
-                f"  {status} {name}: rows={len(spdf)}/{len(dpdf)} "
-                f"cols={'ok' if ok_cols else f'{sorted(scols)} vs {sorted(dcols)}'} "
-                f"vals={'ok' if ok_vals else 'MISMATCH'} "
-                f"dtypes={dtype_msg} ({time.time()-t0:.1f}s)"
-            )
-            n_pass += status == "PASS"
-            n_fail += status == "FAIL"
+            verdict, _ = oracle.check(spark, con, Query(name, fn, oracles.get(name)), SF_ORACLE)
         except Exception as exc:  # noqa: BLE001
             print(f"  ERROR {name}: {type(exc).__name__}: {exc}")
             n_fail += 1
+            continue
+        status = "ROWS-ONLY" if name not in oracles else "FAIL" if verdict else "PASS"
+        print(f"  {status} {name}: {verdict or 'ok'} ({time.time()-t0:.1f}s)")
+        n_fail += bool(verdict)
+        n_pass += not verdict
 
     # codegen guard: scan everything the JVM wrote to stderr
     jvm_log.flush()

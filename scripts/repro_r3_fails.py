@@ -1,13 +1,13 @@
 """Reproduce the 4 CORRECTNESS_r03 hash mismatches under a bone-stock
 SparkSession (the driver builds its own session, not ours — so no UTC
-pin, no shuffle-partition pin, no legacy nanos flag).
+pin, no shuffle-partition pin, no legacy nanos flag). Each query must
+pass `oracle.compare` with floats rounded to 17 decimal places.
 
 Usage: python scripts/repro_r3_fails.py [name ...]
 """
 
 from __future__ import annotations
 
-import math
 import os
 import sys
 
@@ -16,9 +16,6 @@ import duckdb
 sys.path.insert(0, ".")
 
 SF = os.environ.get("SPARK_GRAFT_ORACLE_SF", "/root/testdata/sf0.01")
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
 FOUR = [
     "text_bpe_merges",
     "rel_skew_salted_join",
@@ -31,16 +28,6 @@ FOUR = [
     "rel_ts_correlation",
     "emb_label_centroid_drift",
 ]
-
-
-def canon(rows, cols, ndigits=6):
-    def norm(v):
-        if isinstance(v, float):
-            return "nan" if math.isnan(v) else round(v, ndigits)
-        return v
-
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted((tuple(norm(r[i]) for i in idx) for r in rows), key=repr)
 
 
 def main() -> int:
@@ -60,39 +47,14 @@ def main() -> int:
     print("shuffle:", spark.conf.get("spark.sql.shuffle.partitions"))
     print("ansi:", spark.conf.get("spark.sql.ansi.enabled"))
 
-    import __spark_entry__ as entrymod
+    from mrc_spark_jobs_pubmed_spark import oracle, plans
 
-    qs = entrymod.queries()
-    oracles = entrymod.oracle_sql()
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF}/{t}.parquet')"
-        )
-
+    con = oracle.duck_views(duckdb.connect(), SF)
     rc = 0
     for name in names:
-        sdf = qs[name](spark, SF)
-        scols = list(sdf.columns)
-        srows = [tuple(r) for r in sdf.collect()]
-        r = con.execute(oracles[name])
-        dcols = [d[0] for d in r.description]
-        drows = [tuple(x) for x in r.fetchall()]
-        cs, cd = canon(srows, scols), canon(drows, dcols)
-        exact_cs = canon(srows, scols, ndigits=17)
-        exact_cd = canon(drows, dcols, ndigits=17)
-        ok6 = cs == cd
-        okx = exact_cs == exact_cd
-        print(f"{name}: rows {len(srows)}/{len(drows)} 6dp={'OK' if ok6 else 'DIFF'} exact={'OK' if okx else 'DIFF'}")
-        if not okx:
-            rc = 1
-            shown = 0
-            for a, b in zip(exact_cs, exact_cd):
-                if a != b and shown < 8:
-                    print("  spark :", a)
-                    print("  oracle:", b)
-                    shown += 1
+        verdict, _ = oracle.check(spark, con, plans.get(name), SF, ndigits=17)
+        print(f"{name}: {'OK' if verdict is None else 'DIFF ' + verdict}")
+        rc |= verdict is not None
     return rc
 
 

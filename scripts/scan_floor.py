@@ -34,7 +34,7 @@ import duckdb
 sys.path.insert(0, os.path.join(os.path.dirname(os.path.abspath(__file__)), ".."))
 
 from bench import SF_DIR  # noqa: E402
-from mrc_spark_jobs_pubmed_spark import plans  # noqa: E402
+from mrc_spark_jobs_pubmed_spark import oracle, plans  # noqa: E402
 from mrc_spark_jobs_pubmed_spark.session import get_session  # noqa: E402
 
 # the dominant tables + exact column sets each query reads; broadcast-
@@ -165,18 +165,7 @@ def main() -> None:
         app_name="scan-floor",
         extra_conf={"spark.sql.adaptive.advisoryPartitionSizeInBytes": "8m"},
     )
-    con = duckdb.connect()
-    tables = set()
-    for spec in SPECS.values():
-        tables.update(spec)
-    for t in (
-        "region nation customer supplier part orders lineitem events "
-        "documents embeddings"
-    ).split():
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{SF_DIR}/{t}.parquet')"
-        )
+    con = oracle.duck_views(duckdb.connect(), SF_DIR)
 
     registry = plans.all_queries()
     out: dict[str, dict] = {}
@@ -205,7 +194,7 @@ def main() -> None:
         rec["spark_scan_sec"] = round(s_total, 3)
         rec["duckdb_scan_sec"] = round(d_total, 3)
 
-        # --- full queries, same timing contract as bench_vs_duckdb ---
+        # --- full queries, same timing contract as bvd_sweep ---
         q = registry[name]
         q.fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
         t0 = time.time()

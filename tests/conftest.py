@@ -8,10 +8,6 @@ from mrc_spark_jobs_pubmed_spark.session import get_session
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_ORACLE = "/root/testdata/sf0.01"
 
-TABLES = (
-    "region nation customer supplier part orders lineitem events documents embeddings"
-).split()
-
 
 @pytest.fixture(scope="session")
 def spark():
@@ -25,11 +21,3 @@ def duck():
     yield con
     con.close()
 
-
-def duck_with_views(con: duckdb.DuckDBPyConnection, sf_dir: str) -> duckdb.DuckDBPyConnection:
-    """Mimic the driver: fixture tables pre-registered as views."""
-    for t in TABLES:
-        con.execute(
-            f"CREATE OR REPLACE VIEW {t} AS SELECT * FROM read_parquet('{sf_dir}/{t}.parquet')"
-        )
-    return con

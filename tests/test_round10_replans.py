@@ -18,25 +18,14 @@ doctored data — same harness as the driver gate.
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import functions as F
 
-from mrc_spark_jobs_pubmed_spark import plans
+from mrc_spark_jobs_pubmed_spark import oracle, plans
 from mrc_spark_jobs_pubmed_spark.plans.timeseries_queries import OOO_CHUNK_IDS
 from mrc_spark_jobs_pubmed_spark.sources import catalog
 from tests.conftest import SF_SMOKE
-
-
-def _canon(rows, cols):
-    def norm(v):
-        if isinstance(v, float):
-            return "nan" if math.isnan(v) else round(v, 6)
-        return v
-
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted([tuple(norm(r[i]) for i in idx) for r in rows], key=repr)
 
 
 def _doctored_dir(spark, tmp_path, table: str, doctor) -> str:
@@ -51,19 +40,10 @@ def _doctored_dir(spark, tmp_path, table: str, doctor) -> str:
 
 def _check(spark, duck, name: str, sf_dir: str):
     q = plans.all_queries()[name]
-    sdf = q.fn(spark, sf_dir)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    for t in catalog.TABLE_SCHEMAS:
-        duck.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{sf_dir}/{t}.parquet/*.parquet')"
-        )
-    res = duck.execute(q.oracle)
-    duck_cols = [c[0] for c in res.description]
-    duck_rows = [tuple(r) for r in res.fetchall()]
-    assert len(spark_rows) == len(duck_rows) > 0
-    assert _canon(spark_rows, list(sdf.columns)) == _canon(duck_rows, duck_cols)
-    return spark_rows, list(sdf.columns)
+    verdict, got = oracle.check(spark, oracle.duck_views(duck, sf_dir), q, sf_dir)
+    assert verdict is None, verdict
+    assert len(got.frame) > 0
+    return got.frame
 
 
 def test_out_of_order_carries_compose_across_chunks(spark, duck, tmp_path):
@@ -93,9 +73,8 @@ def test_out_of_order_carries_compose_across_chunks(spark, duck, tmp_path):
     )
     assert n_chunks > 1, "fixture must span multiple carry chunks"
 
-    rows, cols = _check(spark, duck, "rel_out_of_order_metrics", d)
-    late = {r[cols.index("event_type")]: r[cols.index("n_late")] for r in rows}
-    assert max(late.values()) > 0, "the poisoned carry must mark late rows"
+    got = _check(spark, duck, "rel_out_of_order_metrics", d)
+    assert got["n_late"].max() > 0, "the poisoned carry must mark late rows"
 
 
 def test_clip_calibration_exact_under_cross_bucket_ties(spark, duck, tmp_path):
@@ -113,10 +92,9 @@ def test_clip_calibration_exact_under_cross_bucket_ties(spark, duck, tmp_path):
         )
 
     d = _doctored_dir(spark, tmp_path, "embeddings", doctor)
-    rows, cols = _check(spark, duck, "emb_clip_calibration", d)
-    assert len(rows) == 64
+    got = _check(spark, duck, "emb_clip_calibration", d)
+    assert len(got) == 64
     # ties must actually exist: with 64-level quantization the p01/p99
     # values land on the 15625-unit grid
-    for r in rows:
-        assert r[cols.index("p01_u6")] % 15625 == 0
-        assert r[cols.index("p99_u6")] % 15625 == 0
+    assert (got["p01_u6"] % 15625 == 0).all()
+    assert (got["p99_u6"] % 15625 == 0).all()

@@ -16,26 +16,15 @@ classes flagged by the r7 review:
 
 from __future__ import annotations
 
-import math
 import os
 
 from pyspark.sql import functions as F
 
-from mrc_spark_jobs_pubmed_spark import plans
+from mrc_spark_jobs_pubmed_spark import oracle, plans
 from mrc_spark_jobs_pubmed_spark.operators import dedup as D
 from mrc_spark_jobs_pubmed_spark.plans import similarity_queries
 from mrc_spark_jobs_pubmed_spark.sources import catalog
 from tests.conftest import SF_SMOKE
-
-
-def _canon(rows, cols):
-    def norm(v):
-        if isinstance(v, float):
-            return "nan" if math.isnan(v) else round(v, 6)
-        return v
-
-    idx = sorted(range(len(cols)), key=lambda i: cols[i])
-    return sorted([tuple(norm(r[i]) for i in idx) for r in rows], key=repr)
 
 
 def test_silhouette_single_label_matches_oracle(spark, duck, tmp_path):
@@ -53,26 +42,13 @@ def test_silhouette_single_label_matches_oracle(spark, duck, tmp_path):
         df.write.mode("overwrite").parquet(os.path.join(d, f"{name}.parquet"))
 
     q = plans.all_queries()["emb_silhouette"]
-    sdf = q.fn(spark, d)
-    spark_rows = [tuple(r) for r in sdf.collect()]
-    # Spark writes <table>.parquet as a DIRECTORY of part files;
-    # duck_with_views expects the driver's single-file layout, so
-    # register the views with a glob here.
-    for t in catalog.TABLE_SCHEMAS:
-        duck.execute(
-            f"CREATE OR REPLACE VIEW {t} AS "
-            f"SELECT * FROM read_parquet('{d}/{t}.parquet/*.parquet')"
-        )
-    res = duck.execute(q.oracle)
-    duck_cols = [c[0] for c in res.description]
-    duck_rows = [tuple(r) for r in res.fetchall()]
+    verdict, got = oracle.check(spark, oracle.duck_views(duck, d), q, d)
 
-    assert len(spark_rows) == len(duck_rows) == 1
-    assert _canon(spark_rows, list(sdf.columns)) == _canon(duck_rows, duck_cols)
-    row = spark_rows[0]
-    cols = list(sdf.columns)
-    assert row[cols.index("den_sum")] is None
-    assert row[cols.index("macro_silhouette")] is None
+    assert verdict is None, verdict
+    assert got.table.num_rows == 1
+    # Arrow keeps NULL apart from NaN (pandas shows both as NaN)
+    assert got.table["den_sum"].null_count == 1
+    assert got.table["macro_silhouette"].null_count == 1
 
 
 def test_connected_components_rejects_string_ids(spark):
