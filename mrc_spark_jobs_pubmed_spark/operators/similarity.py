@@ -259,7 +259,7 @@ def topk_pairs_blocked(
     )
     grouped = tagged.join(F.broadcast(rep), tagged.blk == rep.member)
 
-    def tile_topk(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def tile_topk(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         import numpy as np
 
         left = pdf[pdf["side"] == "L"]
@@ -480,7 +480,7 @@ def semdedup_removed(
     # sf5 evaluating per-pair cosine chains; this kernel is the same
     # shape the kNN join uses). Group size is 1/2^bits of the corpus by
     # quantizer design, so the sims matrix is bounded.
-    def bucket_sem(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def bucket_sem(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return empty
         pdf = pdf.sort_values("_id")
@@ -552,7 +552,7 @@ def knn_join_bucketed(
         {"vec_id": "int64", "neighbor_id": "int64", "cosine": "float64", "rank": "int64"}
     )
 
-    def bucket_knn(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def bucket_knn(key: tuple, pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) < 2:
             return empty
         pdf = pdf.sort_values("_id")

@@ -26,7 +26,7 @@ import time
 from collections.abc import Callable, Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -236,3 +236,15 @@ def fetch_pages(
 
     src = pages.repartition(parallelism) if parallelism else pages
     return src.mapInPandas(run, FETCH_SCHEMA)
+
+
+def observe_fetch(fetched: DataFrame, counts: Observation) -> DataFrame:
+    """Count, inside whichever job consumes `fetched` (none of its own):
+    pages fetched, pages whose retries ran out (payload NULL) and fetch
+    attempts. `counts.get` holds them once that job has finished."""
+    return fetched.observe(
+        counts,
+        F.count(F.lit(1)).alias("pages"),
+        F.count(F.when(F.col("payload").isNull(), 1)).alias("failed"),
+        F.coalesce(F.sum("n_attempts"), F.lit(0)).alias("attempts"),
+    )

@@ -1,15 +1,19 @@
 """End-to-end pipeline: the reference's 4 jobs as one declarative flow.
 
-ingest (work table → pages → fetch) → parse → keywords → partitioned
-sink, with idempotent resume at the fetch boundary. All I/O seams are
-injectable, so tests drive the whole thing with deterministic mocks.
+ingest (work table → pages) → resume → fetch → parse → partitioned
+articles sink → keywords. Resume happens at the fetch boundary: pages
+whose key is already in the articles sink are dropped before any fetch,
+so each page is fetched at most once per run and a resume fetches none.
+Both keyword tables are derived from the articles sink, not from the
+fetch, so they describe exactly the articles that landed. All I/O seams
+are injectable, so tests drive the whole thing with deterministic mocks.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 
 from mrc_spark_jobs_pubmed_spark.pipeline import ingest, keywords, parse, sinks
 
@@ -21,10 +25,15 @@ def run_pipeline(
     end_year: int = 2020,
     search: Callable = ingest.mock_search,
     fetcher: Callable = ingest.mock_fetcher,
-) -> dict[str, DataFrame]:
+) -> dict:
     """Run ingest→parse→keywords, writing keyword tables under out_dir.
 
-    Returns the stage DataFrames for inspection. Output layout:
+    The pages not yet in `{out_dir}/articles` are fetched, parsed and
+    appended in one write job; the keyword tables are then rewritten from
+    the whole articles sink. Returns the stage DataFrames for inspection,
+    and under "ingest" the fetch counters of this run (pages fetched,
+    pages `failed` after exhausting their retries, fetch `attempts`).
+    Output layout:
       {out_dir}/articles/   parquet, partitioned by year
       {out_dir}/keywords_v1/ parquet (word, pmid)
       {out_dir}/keywords_v2/ csv headerless (pmid, keywords, year) — the
@@ -33,20 +42,19 @@ def run_pipeline(
     """
     work = ingest.build_work_table(spark, begin_year, end_year, search)
     pages = ingest.expand_pages(work)
-    fetched = ingest.fetch_pages(pages, fetcher)
-    articles = parse.parse_articles(fetched)
+    counts = Observation()
 
-    sinks.idempotent_write(
-        articles, spark, f"{out_dir}/articles", "page_key", partition_by=("year",)
+    def fetch_and_parse(todo: DataFrame) -> DataFrame:
+        fetched = ingest.observe_fetch(ingest.fetch_pages(todo, fetcher), counts)
+        return parse.parse_articles(fetched)
+
+    articles = sinks.idempotent_write(
+        pages, fetch_and_parse, spark, f"{out_dir}/articles", "page_key",
+        partition_by=("year",),
     )
     kw1 = keywords.keywords_v1(articles)
     sinks.write_partitioned(kw1, f"{out_dir}/keywords_v1", mode="overwrite", n_chunks=5)
     kw2 = keywords.keywords_v2(articles)
-    sinks.write_partitioned(
-        kw2.select("pmid", "keywords", "year"),
-        f"{out_dir}/keywords_v2",
-        fmt="csv",
-        mode="overwrite",
-    )
-    return {"work": work, "pages": pages, "fetched": fetched, "articles": articles,
-            "keywords_v1": kw1, "keywords_v2": kw2}
+    sinks.write_partitioned(kw2, f"{out_dir}/keywords_v2", fmt="csv", mode="overwrite")
+    return {"work": work, "pages": pages, "articles": articles,
+            "keywords_v1": kw1, "keywords_v2": kw2, "ingest": counts.get}

@@ -4,8 +4,9 @@ Reference mechanisms replaced here:
 * A4  blob-per-key uploads (job_pubmed_submit.py:21-28)   → partitioned
   parquet/csv writes with deterministic paths.
 * A5  skip-if-exists guards (4 copies across the jobs)    → an anti-join
-  of the work list against the sink's already-written keys — one
-  declarative resume rule instead of a per-task HTTP existence check.
+  of the work list against the sink's already-written keys, ahead of the
+  fetch — one declarative resume rule instead of a per-task HTTP
+  existence check.
 * A29 manual 5-chunk CSV splitting (word_count.py:85-103) → output
   partitioning (`repartition(n)`), which is what chunking was.
 * A31 input!=output config guard (3 copies)               → validate().
@@ -14,9 +15,10 @@ Reference mechanisms replaced here:
 from __future__ import annotations
 
 import os
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def validate(input_path: str, output_path: str) -> None:
@@ -67,35 +69,52 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def existing_keys(spark: SparkSession, path: str, key_col: str) -> DataFrame | None:
-    """Distinct key values already present in a parquet sink (None if the
-    sink doesn't exist yet)."""
-    if not os.path.exists(path):
+def existing_keys(spark: SparkSession, path: str, key: T.StructField) -> DataFrame | None:
+    """The `key` column of the parquet sink at `path`; None when nothing
+    was ever written there.
+
+    Absent means the path does not exist, asked of the path's own Hadoop
+    filesystem, so the check holds on any store Spark can write to. The
+    schema is given, so a directory that holds no data files reads as an
+    empty frame and no schema-inference job runs. Every other error — a
+    corrupt part file, a permission error — raises, here or in the job
+    that reads the keys: a damaged sink read as empty would re-fetch every
+    page and append duplicates.
+    """
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
         return None
-    try:
-        return spark.read.parquet(path).select(key_col).distinct()
-    except Exception:  # empty/corrupt dir → treat as absent
-        return None
+    return spark.read.schema(T.StructType([key])).parquet(path)
 
 
 def idempotent_write(
-    df: DataFrame,
+    keys: DataFrame,
+    produce: Callable[[DataFrame], DataFrame],
     spark: SparkSession,
     path: str,
     key_col: str,
     partition_by: tuple[str, ...] = (),
-) -> int:
-    """A5 as dataflow: append only rows whose key is not in the sink.
+) -> DataFrame:
+    """A5 as dataflow: produce and append rows only for keys not yet in
+    the sink, and return the whole sink.
 
-    Returns the number of rows written. Works at any scale: the done-key
-    set is a column-pruned parquet scan, and the anti-join broadcasts it
-    when small. (In streaming the checkpoint subsumes this; for batch
-    re-runs this is the resume semantics the reference implemented with
-    per-blob existence checks.)
+    `keys` is anti-joined against the sink's `key_col` values *before*
+    `produce` sees it, so on a resume the expensive stage behind
+    `produce` (the page fetch) runs only for the missing keys — the
+    reference's skip-if-exists guard ahead of the HTTP call, as one join
+    instead of a per-task existence check. `produce(todo)` is appended in
+    a single write job with no counting action, so its lineage runs once.
+    The sink is read back with `produce`'s schema: downstream stages read
+    what landed, not a second evaluation of `produce`. A key whose
+    `produce` rows are all filtered out leaves no trace in the sink, so
+    the next run produces it again (a page whose retries ran out is
+    fetched again; so is a page with no article that has an abstract).
+
+    Works at any scale: the done-key set is a column-pruned parquet scan,
+    and the anti-join broadcasts it when small.
     """
-    done = existing_keys(spark, path, key_col)
-    fresh = df if done is None else df.join(done, key_col, "left_anti")
-    n = fresh.count()
-    if n:
-        write_partitioned(fresh, path, partition_by, mode="append")
-    return n
+    done = existing_keys(spark, path, keys.schema[key_col])
+    todo = keys if done is None else keys.join(done, key_col, "left_anti")
+    out = produce(todo)
+    write_partitioned(out, path, partition_by, mode="append")
+    return spark.read.schema(out.schema).parquet(path)

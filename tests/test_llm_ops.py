@@ -132,6 +132,23 @@ def test_blocked_pairs_match_nested_loop_form(spark):
     assert [tuple(r) for r in naive.collect()] == [tuple(r) for r in blocked.collect()]
 
 
+def test_grouped_gemm_kernels_declare_their_eval_type(spark):
+    # each applyInPandas kernel annotates (key, pdf) -> pdf in full, so
+    # building the query infers the grouped-map type instead of warning
+    import warnings
+
+    emb = spark.createDataFrame(
+        [(i, [float((i * 7 + j) % 5) for j in range(S.EMB_DIM)]) for i in range(8)],
+        "vec_id long, embedding array<float>",
+    )
+    with warnings.catch_warnings(record=True) as caught:
+        warnings.simplefilter("always")
+        S.topk_pairs_blocked(emb, k=5, n_blocks=2)
+        S.semdedup_removed(emb, tau=0.9)
+        S.knn_join_bucketed(emb, k=3)
+    assert not [w for w in caught if "Cannot infer the eval type" in str(w.message)]
+
+
 def test_connected_components_resolves_chains(spark):
     # a~b, b~c (no a~c edge) must land in ONE component labeled min(a);
     # singletons keep their own label

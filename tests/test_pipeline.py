@@ -112,12 +112,45 @@ def test_config_guard_rejects_same_path(tmp_path):
 
 def test_idempotent_write_skips_done_keys(spark, tmp_path):
     out = str(tmp_path / "sink")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    assert sinks.idempotent_write(df, spark, out, "k") == 2
-    # re-run with one new key: only the new row lands
-    df2 = spark.createDataFrame([(2, "b"), (3, "c")], ["k", "v"])
-    assert sinks.idempotent_write(df2, spark, out, "k") == 1
-    assert spark.read.parquet(out).count() == 3
+    values = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"])
+    received = []
+
+    def produce(todo):
+        received.append(sorted(r.k for r in todo.collect()))
+        return todo.join(values, "k")
+
+    keys = spark.createDataFrame([(1,), (2,)], ["k"])
+    assert sinks.idempotent_write(keys, produce, spark, out, "k").count() == 2
+    # re-run with one new key: only the new key is produced, and it lands
+    keys2 = spark.createDataFrame([(2,), (3,)], ["k"])
+    sink = sinks.idempotent_write(keys2, produce, spark, out, "k")
+    assert received == [[1, 2], [3]]
+    assert sink.count() == 3 and spark.read.parquet(out).count() == 3
+
+
+def _n_pages(year: int) -> int:
+    return sum(
+        -(-ingest.mock_search(year, m)[1] // ingest.PAGE_SIZE) for m in range(1, 13)
+    )
+
+
+def _counting_fetcher(calls, limited_url: str, limited_attempts: int):
+    """mock_fetcher that counts its calls in an accumulator and answers
+    `limited_url` with a rate-limit marker for its first
+    `limited_attempts` calls within a task."""
+    seen: dict[str, int] = {}
+
+    def fetcher(url: str) -> str:
+        calls.add(1)
+        seen[url] = seen.get(url, 0) + 1
+        if url == limited_url and seen[url] <= limited_attempts:
+            return "API rate limit exceeded"
+        return ingest.mock_fetcher(url)
+
+    return fetcher
+
+
+_FIRST_PAGE = ingest.mock_search(2020, 1)[0] + "&retstart=0"
 
 
 def test_full_pipeline_end_to_end(spark, tmp_path):
@@ -136,6 +169,68 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     n_before = arts.count()
     run_pipeline(spark, out, 2020, 2020)
     assert spark.read.parquet(f"{out}/articles").count() == n_before
+
+
+def test_fetch_once_per_page_and_resume_fetches_nothing(spark, tmp_path):
+    out = str(tmp_path / "pm")
+    n_pages = _n_pages(2020)
+    calls = spark.sparkContext.accumulator(0)
+    fetcher = _counting_fetcher(calls, _FIRST_PAGE, limited_attempts=1)
+    fresh = run_pipeline(spark, out, 2020, 2020, fetcher=fetcher)
+    # one call per page plus the one rate-limited attempt, across all
+    # four sink writes: the fetch lineage runs once
+    assert calls.value == n_pages + 1
+    assert fresh["ingest"] == {"pages": n_pages, "failed": 0, "attempts": n_pages + 1}
+    n_articles = spark.read.parquet(f"{out}/articles").count()
+
+    resume = run_pipeline(spark, out, 2020, 2020, fetcher=fetcher)
+    assert calls.value == n_pages + 1  # every page is done: no fetch at all
+    assert resume["ingest"] == {"pages": 0, "failed": 0, "attempts": 0}
+    assert spark.read.parquet(f"{out}/articles").count() == n_articles
+    assert resume["keywords_v2"].count() == n_articles
+
+
+def test_resume_refetches_page_whose_retries_ran_out(spark, tmp_path):
+    out = str(tmp_path / "pm")
+    n_pages = _n_pages(2020)
+    calls = spark.sparkContext.accumulator(0)
+    down = _counting_fetcher(calls, _FIRST_PAGE, limited_attempts=99)
+    first = run_pipeline(spark, out, 2020, 2020, fetcher=down)
+    assert first["ingest"] == {"pages": n_pages, "failed": 1, "attempts": n_pages + 4}
+    arts = spark.read.parquet(f"{out}/articles")
+    assert arts.filter(F.col("page_key") == "2020_1_num_0").count() == 0
+    assert arts.select("page_key").distinct().count() == n_pages - 1
+
+    c0 = calls.value
+    healthy = _counting_fetcher(calls, _FIRST_PAGE, limited_attempts=0)
+    resume = run_pipeline(spark, out, 2020, 2020, fetcher=healthy)
+    assert calls.value - c0 == 1  # only the failed page is fetched again
+    assert resume["ingest"] == {"pages": 1, "failed": 0, "attempts": 1}
+    arts = spark.read.parquet(f"{out}/articles")
+    assert arts.filter(F.col("page_key") == "2020_1_num_0").count() > 0
+    assert arts.select("page_key").distinct().count() == n_pages
+    assert arts.count() == arts.select("pmid").distinct().count()
+    assert resume["keywords_v2"].count() == arts.count()
+
+
+def test_pipeline_with_no_pages_writes_empty_sinks(spark, tmp_path):
+    # every month empty: the write still runs (so the counters arrive)
+    # and the sink reads back empty with the articles schema
+    out = str(tmp_path / "pm")
+    for _ in range(2):
+        dfs = run_pipeline(spark, out, 2020, 2020, search=lambda y, m: (f"x://{y}-{m}", 0))
+        assert dfs["ingest"] == {"pages": 0, "failed": 0, "attempts": 0}
+        assert dfs["articles"].count() == 0 and dfs["keywords_v2"].count() == 0
+
+
+def test_resume_on_corrupt_sink_raises_instead_of_reappending(spark, tmp_path):
+    out = tmp_path / "pm"
+    (out / "articles").mkdir(parents=True)
+    (out / "articles" / "part-0.parquet").write_bytes(b"not a parquet file")
+    with pytest.raises(Exception, match="FAILED_READ_FILE"):
+        run_pipeline(spark, str(out), 2020, 2020)
+    left = sorted(p.name for p in (out / "articles").iterdir() if not p.name.startswith("."))
+    assert left == ["part-0.parquet"]
 
 
 def _physical(df) -> str:
