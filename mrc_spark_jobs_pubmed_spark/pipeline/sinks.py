@@ -47,28 +47,6 @@ def write_partitioned(
     writer.save(path)
 
 
-def write_bucketed(
-    df: DataFrame,
-    table: str,
-    bucket_by: str,
-    n_buckets: int = 16,
-    sort_by: str | None = None,
-    mode: str = "overwrite",
-) -> None:
-    """Bucketed managed table: pre-shuffles ONCE at write time so every
-    later equi-join/agg on `bucket_by` is exchange-free.
-
-    This is the scale lever for repeatedly-joined fact tables (orders ⋈
-    lineitem on orderkey at 100 TB): the shuffle is paid once at ingest,
-    amortized over every downstream query. `sort_by` additionally makes
-    those joins sort-merge-ready without a per-query sort.
-    """
-    writer = df.write.mode(mode).bucketBy(n_buckets, bucket_by)
-    if sort_by:
-        writer = writer.sortBy(sort_by)
-    writer.saveAsTable(table)
-
-
 def existing_keys(spark: SparkSession, path: str, key: T.StructField) -> DataFrame | None:
     """The `key` column of the parquet sink at `path`; None when nothing
     was ever written there.

@@ -14,8 +14,7 @@ File-source replay of events.parquet drives deterministic tests
 
 from __future__ import annotations
 
-import os
-import shutil
+from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -23,32 +22,36 @@ from pyspark.sql import functions as F
 from mrc_spark_jobs_pubmed_spark.sources.catalog import events_read_plan
 
 
-# --- crash-safe serving-state versioning for foreachBatch MERGE jobs --------
+# --- crash-safe serving state for the foreachBatch MERGE jobs ---------------
 #
-# r4 ADVICE: the state-copy read wrapped in a bare `except Exception`
-# treated ANY failure (corrupt partial parquet from a crash mid-
-# overwrite, transient FS error) as "first batch" and silently discarded
-# the accumulated state, and the in-place overwrite of the path being
-# read was itself the corruption window. The fix is versioned state:
-# batch N writes `state_dir/v{N}`, readers take the LATEST COMPLETE
-# (_SUCCESS-marked) version <= N, and older versions are pruned only
-# after the new one is fully written — a crash at any point leaves the
-# last good version intact. Structured Streaming replays a failed batch
-# with the SAME batch id, so re-merging into v{N} requires the merge to
-# be IDEMPOTENT per key — true for all three users (left-anti upsert,
-# latest-wins-by-LSN, bitmap OR). Read errors now propagate: only a
-# genuinely absent version directory means "first batch".
+# Batch N writes `{path}_state/v{N}`; readers take the latest version <= N
+# that has a _SUCCESS marker, so a crash mid-write leaves the last good
+# version in place. Two conditions make this safe:
+# - Structured Streaming replays a failed batch with the SAME batch id, so
+#   each job's merge must be idempotent per key (left-anti upsert,
+#   latest-wins by LSN, bitmap OR all are);
+# - older versions are pruned only after the new _SUCCESS exists.
+# Every filesystem call goes to the path's own Hadoop FileSystem, so the
+# state works on any URI Spark can write to (file:, hdfs:, s3a:). Read
+# errors propagate: only an absent version means "first batch".
 
 
-def _state_versions(state_dir: str) -> list[int]:
-    if not os.path.isdir(state_dir):
+def _fs(spark: SparkSession, path: str):
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
+def _state_versions(spark: SparkSession, state_dir: str) -> list[int]:
+    fs, root = _fs(spark, state_dir)
+    if not fs.exists(root):
         return []
+    Path = spark._jvm.org.apache.hadoop.fs.Path
     return sorted(
-        int(d[1:])
-        for d in os.listdir(state_dir)
-        if d.startswith("v")
-        and d[1:].isdigit()
-        and os.path.exists(os.path.join(state_dir, d, "_SUCCESS"))
+        int(name[1:])
+        for st in fs.listStatus(root)
+        if (name := st.getPath().getName()).startswith("v")
+        and name[1:].isdigit()
+        and fs.exists(Path(st.getPath(), "_SUCCESS"))
     )
 
 
@@ -57,10 +60,10 @@ def read_state(spark: SparkSession, state_dir: str, batch_id: int) -> DataFrame 
     None on a true first batch. Versions > batch_id (possible only if a
     checkpoint was deleted while state was kept) are ignored rather
     than merged twice."""
-    versions = [v for v in _state_versions(state_dir) if v <= batch_id]
+    versions = [v for v in _state_versions(spark, state_dir) if v <= batch_id]
     if not versions:
         return None
-    return spark.read.parquet(os.path.join(state_dir, f"v{versions[-1]}"))
+    return spark.read.parquet(f"{state_dir}/v{versions[-1]}")
 
 
 def write_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
@@ -68,10 +71,45 @@ def write_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
     overwrite of v{batch_id} only ever replaces a partial attempt of the
     SAME batch; completed older versions are untouched until the new
     _SUCCESS exists."""
-    df.write.mode("overwrite").parquet(os.path.join(state_dir, f"v{batch_id}"))
-    for v in _state_versions(state_dir):
+    df.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
+    spark = df.sparkSession
+    fs, root = _fs(spark, state_dir)
+    for v in _state_versions(spark, state_dir):
         if v != batch_id:
-            shutil.rmtree(os.path.join(state_dir, f"v{v}"), ignore_errors=True)
+            fs.delete(spark._jvm.org.apache.hadoop.fs.Path(root, f"v{v}"), True)
+
+
+def _run_versioned(
+    stream: DataFrame,
+    path: str,
+    checkpoint: str,
+    reduce: Callable[[DataFrame], DataFrame],
+    merge: Callable[[DataFrame, DataFrame], DataFrame],
+    publish: Callable[[DataFrame], DataFrame],
+    output_mode: str = "append",
+):
+    """foreachBatch serving job over versioned state: per micro-batch,
+    `reduce` the batch, `merge(state, batch)` it into the latest complete
+    state version (the reduced batch alone on a first batch), write the
+    result as version batch_id, and overwrite `path` with `publish(merged)`.
+    """
+    state_dir = path + "_state"
+
+    def _batch(batch_df: DataFrame, batch_id: int) -> None:
+        batch = reduce(batch_df).localCheckpoint(eager=True)
+        state = read_state(batch_df.sparkSession, state_dir, batch_id)
+        merged = batch if state is None else merge(state, batch)
+        merged = merged.localCheckpoint(eager=True)
+        write_state(merged, state_dir, batch_id)
+        publish(merged).write.mode("overwrite").parquet(path)
+
+    return (
+        stream.writeStream.outputMode(output_mode)
+        .foreachBatch(_batch)
+        .option("checkpointLocation", checkpoint)
+        .start()
+    )
+
 
 WATERMARK = "10 minutes"
 TUMBLE = "5 minutes"
@@ -425,31 +463,24 @@ def run_to_memory(stream_df: DataFrame, name: str, output_mode: str = "complete"
     )
 
 
-def run_to_files(
-    stream_df: DataFrame,
-    path: str,
-    checkpoint: str,
-    fmt: str = "parquet",
-    available_now: bool = True,
-):
-    """Durable streaming sink: file output + checkpoint.
+def run_to_files(stream_df: DataFrame, path: str, checkpoint: str):
+    """Durable streaming sink: parquet output + checkpoint, drained with
+    the availableNow trigger.
 
     This is the engine's form of the reference's skip-if-exists resume
     (A5, job_pubmed_submit.py:41-43): the checkpoint records committed
     batches, so restarting the same query against the same checkpoint
     writes nothing twice — exactly-once file output without per-object
-    existence checks. `available_now` drains all available input then
-    stops (the batch-replay trigger); pass False for a continuous query.
+    existence checks.
     """
-    writer = (
+    return (
         stream_df.writeStream.outputMode("append")
-        .format(fmt)
+        .format("parquet")
         .option("path", path)
         .option("checkpointLocation", checkpoint)
+        .trigger(availableNow=True)
+        .start()
     )
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def click_view_interval_join(events: DataFrame) -> DataFrame:
@@ -597,36 +628,26 @@ def run_topk_to_files(
     long-running stream. In update mode the engine emits only the
     (window, type) rows each batch changed and evicts windows the
     watermark has passed, so engine state stays bounded; the full
-    history lives in the serving-copy parquet, where foreachBatch
+    history lives in the versioned `{path}_state` copy, where foreachBatch
     upserts the deltas (left-anti on the key + union — the MERGE INTO
     pattern; on a transactional table format this would be a real
     MERGE). The per-batch input is delta-aggregate volume, not event
     volume; the rank runs over the merged copy, which is one row per
     (window, type) — vocabulary-sized, not stream-sized.
     """
-    counts_dir = path + "_counts"
 
-    def _emit(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = batch_df.localCheckpoint(eager=True)
-        existing = read_state(spark, counts_dir, batch_id)
-        if existing is None:  # true first batch
-            merged = batch
-        else:
-            # idempotent upsert: re-running the same batch replaces the
-            # same keys (required by the versioned-state replay contract)
-            merged = existing.join(
-                batch, ["wstart", "event_type"], "left_anti"
-            ).unionByName(batch)
-        merged = merged.localCheckpoint(eager=True)
-        write_state(merged, counts_dir, batch_id)
-        rank_topk(merged, k).write.mode("overwrite").parquet(path)
+    def upsert(state: DataFrame, batch: DataFrame) -> DataFrame:
+        keep = state.join(batch, ["wstart", "event_type"], "left_anti")
+        return keep.unionByName(batch)
 
-    return (
-        stream_counts.writeStream.outputMode("update")
-        .foreachBatch(_emit)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _run_versioned(
+        stream_counts,
+        path,
+        checkpoint,
+        reduce=lambda batch: batch,
+        merge=upsert,
+        publish=lambda merged: rank_topk(merged, k),
+        output_mode="update",
     )
 
 
@@ -696,29 +717,13 @@ def run_cdc_apply_to_files(
     Append mode with a pass-through projection: the merge logic lives
     entirely in foreachBatch, so no engine aggregation state is held.
     """
-    state_dir = path + "_state"
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = cdc_latest(batch_df).localCheckpoint(eager=True)
-        state = read_state(spark, state_dir, batch_id)
-        if state is None:  # true first batch
-            merged = batch
-        else:
-            # latest-wins by LSN is idempotent under batch replay
-            merged = cdc_latest(state.unionByName(batch))
-        merged = merged.localCheckpoint(eager=True)
-        write_state(merged, state_dir, batch_id)
-        merged.where(F.col("op") == "upsert").drop("op").write.mode(
-            "overwrite"
-        ).parquet(path)
-
-    return (
-        cdc_changelog(events_stream)
-        .writeStream.outputMode("append")
-        .foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _run_versioned(
+        cdc_changelog(events_stream),
+        path,
+        checkpoint,
+        reduce=cdc_latest,
+        merge=lambda state, batch: cdc_latest(state.unionByName(batch)),
+        publish=lambda merged: merged.where(F.col("op") == "upsert").drop("op"),
     )
 
 
@@ -825,6 +830,16 @@ def bitmap_distinct_rollup(words: DataFrame) -> DataFrame:
     )
 
 
+def _bitmap_or(state: DataFrame, words: DataFrame) -> DataFrame:
+    """OR-merge two (day, word_id, bm) word sets; idempotent, so a
+    replayed batch merges to the same state."""
+    return (
+        state.unionByName(words)
+        .groupBy("day", "word_id")
+        .agg(F.expr("bit_or(bm)").alias("bm"))
+    )
+
+
 def run_bitmap_distinct_to_files(
     events_stream: DataFrame, path: str, checkpoint: str
 ):
@@ -845,31 +860,13 @@ def run_bitmap_distinct_to_files(
     8 bytes per 64 users of the ACTIVE id space per day, never the
     stream volume.
     """
-    state_dir = path + "_state"
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = bitmap_words(batch_df).localCheckpoint(eager=True)
-        state = read_state(spark, state_dir, batch_id)
-        if state is None:  # true first batch
-            merged = batch
-        else:
-            # OR is idempotent, so batch replay into the same version
-            # is exact (the at-least-once property the docstring claims)
-            merged = (
-                state.unionByName(batch)
-                .groupBy("day", "word_id")
-                .agg(F.expr("bit_or(bm)").alias("bm"))
-            )
-        merged = merged.localCheckpoint(eager=True)
-        write_state(merged, state_dir, batch_id)
-        bitmap_distinct_rollup(merged).write.mode("overwrite").parquet(path)
-
-    return (
-        events_stream.writeStream.outputMode("append")
-        .foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _run_versioned(
+        events_stream,
+        path,
+        checkpoint,
+        reduce=bitmap_words,
+        merge=_bitmap_or,
+        publish=bitmap_distinct_rollup,
     )
 
 
@@ -1004,29 +1001,13 @@ def run_rolling_distinct_to_files(
     rollup recomputes from sketch state (|days| x active-words rows),
     never from events, so per-batch publish cost is sketch-sized and a
     full replay equals the batch query exactly (OR idempotence)."""
-    state_dir = path + "_state"
-
-    def _merge(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        batch = bitmap_words(batch_df).localCheckpoint(eager=True)
-        state = read_state(spark, state_dir, batch_id)
-        if state is None:  # true first batch
-            merged = batch
-        else:
-            merged = (
-                state.unionByName(batch)
-                .groupBy("day", "word_id")
-                .agg(F.expr("bit_or(bm)").alias("bm"))
-            )
-        merged = merged.localCheckpoint(eager=True)
-        write_state(merged, state_dir, batch_id)
-        rolling_distinct_rollup(merged).write.mode("overwrite").parquet(path)
-
-    return (
-        events_stream.writeStream.outputMode("append")
-        .foreachBatch(_merge)
-        .option("checkpointLocation", checkpoint)
-        .start()
+    return _run_versioned(
+        events_stream,
+        path,
+        checkpoint,
+        reduce=bitmap_words,
+        merge=_bitmap_or,
+        publish=rolling_distinct_rollup,
     )
 
 

@@ -239,29 +239,6 @@ def _physical(df) -> str:
     )
 
 
-def test_bucketed_join_is_exchange_free(spark, tmp_path):
-    # shuffle paid once at write time: a join of two tables bucketed on
-    # the same key must plan with zero Exchange nodes
-    from mrc_spark_jobs_pubmed_spark.pipeline import sinks
-
-    left = spark.range(0, 1000).withColumn("v", F.col("id") % 7)
-    right = spark.range(0, 1000).withColumn("w", F.col("id") % 3)
-    sinks.write_bucketed(left, "t_bkt_left", "id", n_buckets=4, sort_by="id")
-    sinks.write_bucketed(right, "t_bkt_right", "id", n_buckets=4, sort_by="id")
-    try:
-        joined = (
-            spark.table("t_bkt_left")
-            .hint("merge")  # force SMJ: broadcast would hide the bucketing
-            .join(spark.table("t_bkt_right"), "id")
-        )
-        plan = _physical(joined)
-        assert "Exchange" not in plan
-        assert joined.count() == 1000
-    finally:
-        spark.sql("DROP TABLE IF EXISTS t_bkt_left")
-        spark.sql("DROP TABLE IF EXISTS t_bkt_right")
-
-
 def test_partitioned_write_enables_partition_pruning(spark, tmp_path):
     # partitionBy(year) layout → a year predicate prunes at the file
     # index, never touching other partitions (the declarative form of the

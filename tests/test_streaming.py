@@ -5,6 +5,7 @@ forms when the whole fixture is replayed through micro-batches."""
 from __future__ import annotations
 
 import pandas as pd
+import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -444,7 +445,15 @@ def test_cdc_apply_resumes_from_checkpoint(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_bitmap_distinct_stream_equals_batch(spark, tmp_path):
+# the serving state lives on the path's own Hadoop filesystem, so a URI
+# path must behave exactly like a bare local path
+_PATH_FORMS = pytest.mark.parametrize(
+    "as_path", [str, lambda p: p.as_uri()], ids=["local", "file_uri"]
+)
+
+
+@_PATH_FORMS
+def test_bitmap_distinct_stream_equals_batch(spark, tmp_path, as_path):
     """Streaming exact-distinct maintenance (foreachBatch bitmap
     OR-merge) must serve exactly the batch rollup rel_bitmap_distinct
     computes, for ANY micro-batch split — OR is associative and
@@ -457,9 +466,9 @@ def test_bitmap_distinct_stream_equals_batch(spark, tmp_path):
         .option("maxFilesPerTrigger", "1")
         .parquet(src)
     )
-    out = str(tmp_path / "bm_serving")
+    out = as_path(tmp_path / "bm_serving")
     q = J.run_bitmap_distinct_to_files(
-        stream, out, str(tmp_path / "bm_ckpt")
+        stream, out, as_path(tmp_path / "bm_ckpt")
     )
     _drain(q)
     got = {
@@ -560,15 +569,16 @@ def test_stateful_ewma_stream_equals_batch(spark, tmp_path):
     assert got == want and len(got) > 0
 
 
-def test_versioned_state_survives_partial_write(spark, tmp_path):
-    """Crash-safety contract of the foreachBatch serving state (r4
-    ADVICE): a partial (no _SUCCESS) version directory — the artifact a
-    crash mid-write leaves behind — must be IGNORED by read_state, and
+@_PATH_FORMS
+def test_versioned_state_survives_partial_write(spark, tmp_path, as_path):
+    """Crash-safety contract of the foreachBatch serving state: a
+    partial (no _SUCCESS) version directory — the artifact a crash
+    mid-write leaves behind — must be IGNORED by read_state, and
     write_state must prune only after the new version is complete, so
     the last good state can never be destroyed."""
     import os
 
-    state_dir = str(tmp_path / "state")
+    state_dir = as_path(tmp_path / "state")
 
     df1 = spark.range(3).select(F.col("id").alias("k"), F.lit(1).alias("v"))
     J.write_state(df1, state_dir, batch_id=0)
@@ -576,7 +586,7 @@ def test_versioned_state_survives_partial_write(spark, tmp_path):
 
     # simulate a crash mid-write of v1: parquet files present, no _SUCCESS
     df2 = spark.range(7).select(F.col("id").alias("k"), F.lit(2).alias("v"))
-    df2.write.mode("overwrite").parquet(str(tmp_path / "state" / "v1"))
+    df2.write.mode("overwrite").parquet(f"{state_dir}/v1")
     os.remove(str(tmp_path / "state" / "v1" / "_SUCCESS"))
 
     got = J.read_state(spark, state_dir, 5)
@@ -585,7 +595,7 @@ def test_versioned_state_survives_partial_write(spark, tmp_path):
     # the replayed batch 1 overwrites its own partial attempt and prunes v0
     J.write_state(df2, state_dir, batch_id=1)
     assert J.read_state(spark, state_dir, 5).count() == 7
-    assert sorted(os.listdir(state_dir)) == ["v1"]
+    assert sorted(os.listdir(tmp_path / "state")) == ["v1"]
 
     # a version NEWER than the replaying batch id is never served
     assert J.read_state(spark, state_dir, 0) is None
