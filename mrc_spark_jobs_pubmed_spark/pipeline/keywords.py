@@ -16,8 +16,22 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 from mrc_spark_jobs_pubmed_spark.functions import text as TX
+
+# The output schemas, for reading a written keyword sink back without an
+# inference job.
+V1_SCHEMA = T.StructType(
+    [T.StructField("word", T.StringType()), T.StructField("pmid", T.StringType())]
+)
+V2_SCHEMA = T.StructType(
+    [
+        T.StructField("pmid", T.StringType()),
+        T.StructField("keywords", T.StringType()),
+        T.StructField("year", T.IntegerType()),
+    ]
+)
 
 
 def keywords_v1(articles: DataFrame) -> DataFrame:

@@ -5,8 +5,11 @@ articles sink → keywords. Resume happens at the fetch boundary: pages
 whose key is already in the articles sink are dropped before any fetch,
 so each page is fetched at most once per run and a resume fetches none.
 Both keyword tables are derived from the articles sink, not from the
-fetch, so they describe exactly the articles that landed. All I/O seams
-are injectable, so tests drive the whole thing with deterministic mocks.
+fetch, so they describe exactly the articles that landed, and each is
+rewritten only when the articles sink holds other files than the ones it
+was last derived from: a resume that lands no new article writes nothing.
+All I/O seams are injectable, so tests drive the whole thing with
+deterministic mocks.
 """
 
 from __future__ import annotations
@@ -29,10 +32,14 @@ def run_pipeline(
     """Run ingest→parse→keywords, writing keyword tables under out_dir.
 
     The pages not yet in `{out_dir}/articles` are fetched, parsed and
-    appended in one write job; the keyword tables are then rewritten from
-    the whole articles sink. Returns the stage DataFrames for inspection,
-    and under "ingest" the fetch counters of this run (pages fetched,
-    pages `failed` after exhausting their retries, fetch `attempts`).
+    appended in one write job. Each keyword table is then rewritten from
+    the whole articles sink, unless it was already derived from the
+    articles files that are there now (`sinks.derived_write`); a table not
+    rewritten is returned as a read of its sink. Returns the stage
+    DataFrames for inspection; under "ingest" the fetch counters of this
+    run (pages fetched, pages `failed` after exhausting their retries,
+    fetch `attempts`); and under "keywords" whether each keyword table
+    was "rewritten" or already "current".
     Output layout:
       {out_dir}/articles/   parquet, partitioned by year
       {out_dir}/keywords_v1/ parquet (word, pmid)
@@ -52,9 +59,15 @@ def run_pipeline(
         pages, fetch_and_parse, spark, f"{out_dir}/articles", "page_key",
         partition_by=("year",),
     )
-    kw1 = keywords.keywords_v1(articles)
-    sinks.write_partitioned(kw1, f"{out_dir}/keywords_v1", mode="overwrite", n_chunks=5)
-    kw2 = keywords.keywords_v2(articles)
-    sinks.write_partitioned(kw2, f"{out_dir}/keywords_v2", fmt="csv", mode="overwrite")
+    kw1, new1 = sinks.derived_write(
+        keywords.keywords_v1, articles, spark,
+        f"{out_dir}/keywords_v1", keywords.V1_SCHEMA, n_chunks=5,
+    )
+    kw2, new2 = sinks.derived_write(
+        keywords.keywords_v2, articles, spark,
+        f"{out_dir}/keywords_v2", keywords.V2_SCHEMA, fmt="csv",
+    )
+    state = {True: "rewritten", False: "current"}
     return {"work": work, "pages": pages, "articles": articles,
-            "keywords_v1": kw1, "keywords_v2": kw2, "ingest": counts.get}
+            "keywords_v1": kw1, "keywords_v2": kw2, "ingest": counts.get,
+            "keywords": {"keywords_v1": state[new1], "keywords_v2": state[new2]}}

@@ -6,27 +6,30 @@ Reference mechanisms replaced here:
 * A5  skip-if-exists guards (4 copies across the jobs)    → an anti-join
   of the work list against the sink's already-written keys, ahead of the
   fetch — one declarative resume rule instead of a per-task HTTP
-  existence check.
+  existence check. The keyword jobs' copies (word_count.py:78-81,
+  extract_keywords_from_all_abstracts.py:85-87) become `derived_write`:
+  a table derived from a sink is rewritten only when that sink's files
+  changed since the table was last written.
 * A29 manual 5-chunk CSV splitting (word_count.py:85-103) → output
   partitioning (`repartition(n)`), which is what chunking was.
-* A31 input!=output config guard (3 copies)               → validate().
+
+Every existence check and marker write asks the path's own Hadoop
+filesystem, so the sinks hold on any store Spark can write to.
 """
 
 from __future__ import annotations
 
-import os
+import hashlib
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def validate(input_path: str, output_path: str) -> None:
-    """A31: fail fast when a job would read and write the same path."""
-    if os.path.abspath(input_path) == os.path.abspath(output_path):
-        raise ValueError(
-            f"input_path == output_path ({input_path!r}); refusing to overwrite input"
-        )
+def _hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for `path`, on the filesystem its scheme names."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def write_partitioned(
@@ -51,16 +54,15 @@ def existing_keys(spark: SparkSession, path: str, key: T.StructField) -> DataFra
     """The `key` column of the parquet sink at `path`; None when nothing
     was ever written there.
 
-    Absent means the path does not exist, asked of the path's own Hadoop
-    filesystem, so the check holds on any store Spark can write to. The
+    Absent means the path does not exist on its own filesystem. The
     schema is given, so a directory that holds no data files reads as an
     empty frame and no schema-inference job runs. Every other error — a
     corrupt part file, a permission error — raises, here or in the job
     that reads the keys: a damaged sink read as empty would re-fetch every
     page and append duplicates.
     """
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    if not jpath.getFileSystem(spark._jsc.hadoopConfiguration()).exists(jpath):
+    fs, jpath = _hadoop_path(spark, path)
+    if not fs.exists(jpath):
         return None
     return spark.read.schema(T.StructType([key])).parquet(path)
 
@@ -96,3 +98,40 @@ def idempotent_write(
     out = produce(todo)
     write_partitioned(out, path, partition_by, mode="append")
     return spark.read.schema(out.schema).parquet(path)
+
+
+def derived_write(
+    derive: Callable[[DataFrame], DataFrame],
+    source: DataFrame,
+    spark: SparkSession,
+    path: str,
+    schema: T.StructType,
+    fmt: str = "parquet",
+    n_chunks: int | None = None,
+) -> tuple[DataFrame, bool]:
+    """Overwrite `path` with `derive(source)` unless the sink there is
+    already derived from exactly `source`'s data files; return (table,
+    rewritten).
+
+    Each committed overwrite is followed by an empty `_from-<digest>`
+    marker inside `path`, the digest a hash of `source.inputFiles()`
+    sorted. Spark, pyarrow and `part-*` globs skip `_`-prefixed names; the
+    next overwrite deletes the marker with the rest of the sink, and a
+    crash during the write leaves none. So the marker is found only when
+    the last write of `path` committed and `source` holds the same files
+    now: a run that appended to `source` and crashed before rewriting
+    `path` changes the digest, and the next run rewrites. When the marker
+    is found nothing is built or written, and the sink is read back with
+    `schema`, so no inference job runs.
+    """
+    files = "\n".join(sorted(source.inputFiles()))
+    fs, jpath = _hadoop_path(spark, path)
+    marker = spark._jvm.org.apache.hadoop.fs.Path(
+        jpath, "_from-" + hashlib.sha256(files.encode()).hexdigest()
+    )
+    if fs.exists(marker):
+        return spark.read.schema(schema).format(fmt).load(path), False
+    df = derive(source)
+    write_partitioned(df, path, fmt=fmt, mode="overwrite", n_chunks=n_chunks)
+    fs.create(marker, True).close()
+    return df, True

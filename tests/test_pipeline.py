@@ -105,11 +105,6 @@ def test_keywords_v2_shape(spark):
     assert row.keywords == "cat chase daily mouse"
 
 
-def test_config_guard_rejects_same_path(tmp_path):
-    with pytest.raises(ValueError, match="input_path == output_path"):
-        sinks.validate(str(tmp_path), str(tmp_path))
-
-
 def test_idempotent_write_skips_done_keys(spark, tmp_path):
     out = str(tmp_path / "sink")
     values = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], ["k", "v"])
@@ -152,6 +147,25 @@ def _counting_fetcher(calls, limited_url: str, limited_attempts: int):
 
 _FIRST_PAGE = ingest.mock_search(2020, 1)[0] + "&retstart=0"
 
+# the keyword sinks' markers live on the path's own Hadoop filesystem, so
+# a URI output dir must behave exactly like a bare local path
+_PATH_FORMS = pytest.mark.parametrize(
+    "as_path", [str, lambda p: p.as_uri()], ids=["local", "file_uri"]
+)
+
+
+def _pmids(df) -> list[str]:
+    return sorted(r.pmid for r in df.select("pmid").collect())
+
+
+def _keyword_parts(out_dir) -> dict[str, float]:
+    """{part file: mtime} of both keyword sinks under a local out_dir."""
+    return {
+        f"{p.parent.name}/{p.name}": p.stat().st_mtime
+        for sink in ("keywords_v1", "keywords_v2")
+        for p in (out_dir / sink).glob("part-*")
+    }
+
 
 def test_full_pipeline_end_to_end(spark, tmp_path):
     out = str(tmp_path / "pm")
@@ -171,8 +185,9 @@ def test_full_pipeline_end_to_end(spark, tmp_path):
     assert spark.read.parquet(f"{out}/articles").count() == n_before
 
 
-def test_fetch_once_per_page_and_resume_fetches_nothing(spark, tmp_path):
-    out = str(tmp_path / "pm")
+@_PATH_FORMS
+def test_fetch_once_per_page_and_resume_fetches_nothing(spark, tmp_path, as_path):
+    out = as_path(tmp_path / "pm")
     n_pages = _n_pages(2020)
     calls = spark.sparkContext.accumulator(0)
     fetcher = _counting_fetcher(calls, _FIRST_PAGE, limited_attempts=1)
@@ -210,7 +225,53 @@ def test_resume_refetches_page_whose_retries_ran_out(spark, tmp_path):
     assert arts.filter(F.col("page_key") == "2020_1_num_0").count() > 0
     assert arts.select("page_key").distinct().count() == n_pages
     assert arts.count() == arts.select("pmid").distinct().count()
-    assert resume["keywords_v2"].count() == arts.count()
+    assert resume["keywords"] == {"keywords_v1": "rewritten", "keywords_v2": "rewritten"}
+    kw2 = _pmids(spark.read.schema(keywords.V2_SCHEMA).csv(f"{out}/keywords_v2"))
+    assert set(_pmids(arts.filter(F.col("page_key") == "2020_1_num_0"))) <= set(kw2)
+    assert kw2 == _pmids(arts)
+
+
+@_PATH_FORMS
+def test_resume_that_lands_nothing_rewrites_no_keyword_table(spark, tmp_path, as_path):
+    out = as_path(tmp_path / "pm")
+    fresh = run_pipeline(spark, out, 2020, 2020)
+    assert fresh["keywords"] == {"keywords_v1": "rewritten", "keywords_v2": "rewritten"}
+    parts = _keyword_parts(tmp_path / "pm")
+    assert parts
+
+    resume = run_pipeline(spark, out, 2020, 2020)
+    assert resume["ingest"]["pages"] == 0
+    assert resume["keywords"] == {"keywords_v1": "current", "keywords_v2": "current"}
+    assert _keyword_parts(tmp_path / "pm") == parts  # not one file rewritten
+    for name in ("keywords_v1", "keywords_v2"):
+        # the sink read back has the schema of the frame that wrote it
+        assert [(f.name, f.dataType) for f in resume[name].schema] == [
+            (f.name, f.dataType) for f in fresh[name].schema
+        ]
+        assert resume[name].count() == fresh[name].count()
+
+
+@_PATH_FORMS
+def test_resume_after_crash_before_keyword_writes_rewrites_them(spark, tmp_path, as_path):
+    out = as_path(tmp_path / "pm")
+    run_pipeline(spark, out, 2020, 2020)
+    # a run that appended one new page's articles and died before its
+    # keyword writes: the articles sink changed behind the keyword tables
+    page = ingest.expand_pages(ingest.build_work_table(spark, 2021, 2021)).limit(1)
+    arts = sinks.idempotent_write(
+        page, lambda todo: parse.parse_articles(ingest.fetch_pages(todo)), spark,
+        f"{out}/articles", "page_key", partition_by=("year",),
+    )
+    assert arts.filter(F.col("year") == 2021).count() > 0
+
+    resume = run_pipeline(spark, out, 2020, 2020)
+    assert resume["ingest"]["pages"] == 0
+    assert resume["keywords"] == {"keywords_v1": "rewritten", "keywords_v2": "rewritten"}
+    for sink in ("keywords_v1", "keywords_v2"):  # the overwrite took the old marker
+        assert len(list((tmp_path / "pm" / sink).glob("_from-*"))) == 1
+    want = _pmids(spark.read.parquet(f"{out}/articles"))
+    assert _pmids(spark.read.schema(keywords.V2_SCHEMA).csv(f"{out}/keywords_v2")) == want
+    assert set(_pmids(spark.read.parquet(f"{out}/keywords_v1"))) <= set(want)
 
 
 def test_pipeline_with_no_pages_writes_empty_sinks(spark, tmp_path):
