@@ -1,44 +1,122 @@
-"""Text pipeline as native Catalyst column expressions.
+"""Text pipeline as native Catalyst expressions, compiled from rule tables.
 
 The reference runs its entire text pipeline inside opaque Python closures
 per file (word_count.py:41-65): regex cleans, lowercase, split, stopword
-set-difference, per-abstract dedup, lemmatize. Here each step is a
-composable ``Column`` expression — JVM-side, whole-stage-codegen'd,
-pushdown-friendly — mirroring SURVEY.md §2 A13-A25.
+set-difference, per-abstract dedup, lemmatize. Here every step is a
+Catalyst expression — JVM-side, whole-stage-codegen'd, pushdown-friendly —
+mirroring SURVEY.md §2 A13-A25.
 
-Lemmatization (A20/A21) is the one step with no Spark built-in. The engine
-ships a rule-table noun lemmatizer defined ONCE as data (`LEMMA_IRREGULAR`
-+ `LEMMA_SUFFIX_RULES`) and compiled two ways:
+Each rule table is data — the clean passes (`CLEAN_PASSES`), the stopword
+lists, the noun lemma rules (`LEMMA_*`), the verb rules (`VERB_*`) and
+the POS classes (`POS_SUFFIX_RULES`) — and has ONE compiler, which emits
+SQL text in one of two dialects:
 
-* `lemmatize_token_col()` — a Spark ``Column`` (CASE WHEN chain), so the
-  hot path never crosses into Python; and
-* `lemma_sql()` — the equivalent ANSI-SQL CASE expression, so the DuckDB
-  correctness oracle runs the *same* rules.
+* ``"spark"`` — the engine's form. Each Column function below takes its
+  input column by name and is one ``F.expr`` over that text (`keywords_v2`
+  two: its lemmas and its stopword array, so the nltk seam can stand in
+  for the lemmas), so building a keyword expression is one SQL parse on
+  the JVM instead of one py4j call per rule;
+* ``"duckdb"`` — the correctness oracle's form (the compilers' default),
+  so DuckDB runs the *same* rules.
 
-When NLTK is installed, `lemmatize_tokens(..., use_nltk=True)` swaps in a
-WordNet pandas_udf behind the same interface (Arrow-batched, never
-row-at-a-time). Rule coverage targets the reference's golden example
-(spark-pubmed-word-count/README.md:4-15: publications→publication,
-men→man) plus common English noun suffixes; divergence from full WordNet
-is documented, deliberate, and oracle-consistent.
+Lemmatization (A20/A21) is the one step with no Spark built-in, so the
+rule tables are a deliberate approximation: they target the reference's
+golden example (spark-pubmed-word-count/README.md:4-15: publications→
+publication, men→man) plus common English suffixes, and their divergence
+from full WordNet is documented and oracle-consistent. When NLTK is
+installed, `use_nltk=True` swaps in a WordNet pandas_udf behind the same
+interface (Arrow-batched, never row-at-a-time).
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Callable, Sequence
 
 import pandas as pd
+from pyspark import SparkContext
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from mrc_spark_jobs_pubmed_spark.functions.stopwords import MRC_STOPWORDS, STOPWORDS
 
+SPARK, DUCKDB = "spark", "duckdb"
+
+# --- the two dialects -------------------------------------------------------
+#
+# Spark literals are raw (r'...'), because Spark SQL processes backslash
+# escapes and the regex patterns hold them; a word holding a quote (the
+# stopword "aren't") is double-quoted instead. DuckDB literals are
+# standard SQL ('' escapes a quote). Spark's regexp_replace replaces every
+# match and writes a group as $1; DuckDB's replaces the first unless given
+# the 'g' flag and writes a group as \1.
+
+
+def _lit(s: str, dialect: str) -> str:
+    if dialect == SPARK:
+        return f'r"{s}"' if "'" in s else f"r'{s}'"
+    return "'" + s.replace("'", "''") + "'"
+
+
+def _matches(expr: str, pattern: str, dialect: str) -> str:
+    if dialect == SPARK:
+        return f"{expr} RLIKE {_lit(pattern, dialect)}"
+    return f"regexp_matches({expr}, {_lit(pattern, dialect)})"
+
+
+def _replace(expr: str, pattern: str, repl: str, dialect: str, every: bool = False) -> str:
+    """regexp_replace; `every` replaces all matches in DuckDB too (Spark
+    always does; the lemma rules are anchored, so one match is all)."""
+    if dialect == SPARK:
+        return f"regexp_replace({expr}, {_lit(pattern, dialect)}, {_lit(repl, dialect)})"
+    flag = ", 'g'" if every else ""
+    duck_repl = repl.replace("$1", "\\1")
+    return f"regexp_replace({expr}, {_lit(pattern, dialect)}, {_lit(duck_repl, dialect)}{flag})"
+
+
+def _case(whens: list[tuple[str, str]], default: str) -> str:
+    return " ".join(["CASE", *(f"WHEN {c} THEN {v}" for c, v in whens), f"ELSE {default} END"])
+
+
+def _exact_whens(expr: str, pairs, dialect: str) -> list[tuple[str, str]]:
+    """WHEN branches mapping a whole word to its lemma."""
+    return [(f"{expr} = {_lit(word, dialect)}", _lit(lemma, dialect)) for word, lemma in pairs]
+
+
+def _suffix_whens(expr: str, rules, dialect: str) -> list[tuple[str, str]]:
+    """WHEN branches of (match, strip, replacement, min length) rules."""
+    return [
+        (f"{_matches(expr, match, dialect)} AND length({expr}) >= {min_len}",
+         _replace(expr, strip, repl, dialect))
+        for match, strip, repl, min_len in rules
+    ]
+
+
+def stoplist_sql(words: Sequence[str], dialect: str = DUCKDB) -> str:
+    """A word list as comma-separated SQL literals."""
+    return ", ".join(_lit(w, dialect) for w in words)
+
+
+def _col(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _transform(arr: str, rule: Callable[[str, str], str]) -> str:
+    """Spark `transform(arr, x -> rule(x))`. The lambda variable is named
+    from the JVM-wide counter `F.transform` draws from, one name per
+    transform, so the plan renders `lambda x_N` as `F.transform`'s would
+    and every lambda built after it keeps its number."""
+    sc = SparkContext._active_spark_context
+    x = sc._jvm.PythonSQLUtils.unresolvedNamedLambdaVariable("x").toString()
+    return f"transform({arr}, {x} -> {rule(x, SPARK)})"
+
+
 # --- cleaning (A13-A16) ----------------------------------------------------
 
-# (pattern, replacement) applied in the reference's order. After the first
-# pass only [a-zA-Z ] remains, so the HTML-entity pass is a no-op kept for
-# pipeline-shape parity (word_count.py:52-58).
+# (pattern, replacement) applied in the reference's order, lowercasing
+# after the first. After the first pass only [a-zA-Z ] remains, so the
+# HTML-entity pass is a no-op kept for pipeline-shape parity
+# (word_count.py:52-58).
 CLEAN_PASSES: tuple[tuple[str, str], ...] = (
     ("[^a-zA-Z]", " "),
     ("&lt;/?.*?&gt;", " &lt;&gt; "),
@@ -46,53 +124,69 @@ CLEAN_PASSES: tuple[tuple[str, str], ...] = (
 )
 
 
-def clean_text(col: Column) -> Column:
-    """Strip punctuation/digits, lowercase — A13, A14, A15, A16."""
-    out = F.regexp_replace(col, CLEAN_PASSES[0][0], CLEAN_PASSES[0][1])
-    out = F.lower(out)
-    for pat, repl in CLEAN_PASSES[1:]:
-        out = F.regexp_replace(out, pat, repl)
-    return F.trim(out)
-
-
-def clean_text_sql(expr: str) -> str:
-    """DuckDB SQL mirror of `clean_text` (DuckDB needs the 'g' flag)."""
-    out = f"regexp_replace({expr}, '[^a-zA-Z]', ' ', 'g')"
-    out = f"lower({out})"
-    out = f"regexp_replace({out}, '&lt;/?.*?&gt;', ' &lt;&gt; ', 'g')"
-    out = f"regexp_replace({out}, '(\\d|\\W)+', ' ', 'g')"
+def clean_text_sql(expr: str, dialect: str = DUCKDB) -> str:
+    """Strip punctuation/digits, lowercase, trim — A13, A14, A15, A16."""
+    (pat, repl), *rest = CLEAN_PASSES
+    out = f"lower({_replace(expr, pat, repl, dialect, every=True)})"
+    for pat, repl in rest:
+        out = _replace(out, pat, repl, dialect, every=True)
     return f"trim({out})"
+
+
+def clean_text(name: str) -> Column:
+    """Column `name`, cleaned (`clean_text_sql`)."""
+    return F.expr(clean_text_sql(_col(name), SPARK))
 
 
 # --- tokenize (A17) --------------------------------------------------------
 
 
-def tokenize(col: Column) -> Column:
-    """Whitespace tokenizer → array<string>, empty tokens dropped.
+def _tokenize_sql(expr: str) -> str:
+    return f"regexp_extract_all({expr}, r'\\S+', 0)"
 
-    One codegen'd `regexp_extract_all('\\S+')` pass — value-identical to
-    split-then-drop-empties without the interpreted `filter` lambda."""
-    return F.regexp_extract_all(col, F.lit(r"\S+"), F.lit(0))
+
+def _clean_tokens_sql(name: str) -> str:
+    return _tokenize_sql(clean_text_sql(_col(name), SPARK))
+
+
+def tokenize(name: str) -> Column:
+    """Whitespace tokenizer → array<string>, empty tokens dropped: one
+    codegen'd `regexp_extract_all('\\S+')` pass, value-identical to
+    split-then-drop-empties without an interpreted `filter` lambda."""
+    return F.expr(_tokenize_sql(_col(name)))
+
+
+def clean_tokens(name: str) -> Column:
+    """The cleaned text's tokens: `tokenize` over `clean_text`."""
+    return F.expr(_clean_tokens_sql(name))
 
 
 # --- stopwords (A23) / dedup (A24) ----------------------------------------
 
 
-def remove_stopwords(col: Column, stopwords: Sequence[str] = STOPWORDS) -> Column:
+def _stop_array_sql(stopwords: Sequence[str]) -> str:
+    return f"array({stoplist_sql(stopwords, SPARK)})"
+
+
+def _except_sql(expr: str, stopwords: Sequence[str]) -> str:
+    return f"array_except({expr}, {_stop_array_sql(stopwords)})"
+
+
+def remove_stopwords(name: str, stopwords: Sequence[str] = STOPWORDS) -> Column:
     """Set-difference against the stopword list.
 
     `array_except` also deduplicates, matching the reference's Python-set
     semantics (word_count.py:61). The list travels as an array literal —
-    Catalyst constant, shipped once per plan, not per closure.
+    a Catalyst constant, shipped once per plan, not per closure.
     """
-    return F.array_except(col, F.array(*[F.lit(w) for w in stopwords]))
+    return F.expr(_except_sql(_col(name), stopwords))
 
 
-def distinct_tokens(col: Column) -> Column:
-    return F.array_distinct(col)
+def distinct_tokens(name: str) -> Column:
+    return F.expr(f"array_distinct({_col(name)})")
 
 
-# --- lemmatizer (A20/A21): one rule table, two backends --------------------
+# --- lemmatizer (A20/A21): the rule table, or nltk behind the same seam ---
 
 # Irregular plurals (noun-default, as the reference's v1 lemmatizer).
 LEMMA_IRREGULAR: tuple[tuple[str, str], ...] = (
@@ -131,40 +225,20 @@ LEMMA_SUFFIX_RULES: tuple[tuple[str, str, str, int], ...] = (
 )
 
 
-def lemmatize_token_col(tok: Column) -> Column:
-    """Compile the rule table to a Catalyst CASE WHEN chain over one token."""
-    expr = None
-    for plural, singular in LEMMA_IRREGULAR:
-        cond = tok == F.lit(plural)
-        expr = F.when(cond, F.lit(singular)) if expr is None else expr.when(cond, F.lit(singular))
-    keep = tok.isin(*LEMMA_KEEP)
-    expr = expr.when(keep, tok)
-    for match, strip, repl, min_len in LEMMA_SUFFIX_RULES:
-        cond = tok.rlike(match) & (F.length(tok) >= min_len)
-        expr = expr.when(cond, F.regexp_replace(tok, strip, repl))
-    return expr.otherwise(tok)
+def lemma_sql(expr: str, dialect: str = DUCKDB) -> str:
+    """The noun rule table over one token, as a CASE expression."""
+    whens = [
+        *_exact_whens(expr, LEMMA_IRREGULAR, dialect),
+        (f"{expr} IN ({stoplist_sql(LEMMA_KEEP, dialect)})", expr),
+        *_suffix_whens(expr, LEMMA_SUFFIX_RULES, dialect),
+    ]
+    return _case(whens, expr)
 
 
-def lemma_sql(expr: str) -> str:
-    """The SAME rule table as ANSI SQL (DuckDB oracle mirror)."""
-    parts = ["CASE"]
-    for plural, singular in LEMMA_IRREGULAR:
-        parts.append(f"WHEN {expr} = '{plural}' THEN '{singular}'")
-    keep_list = ", ".join(f"'{w}'" for w in LEMMA_KEEP)
-    parts.append(f"WHEN {expr} IN ({keep_list}) THEN {expr}")
-    for match, strip, repl, min_len in LEMMA_SUFFIX_RULES:
-        parts.append(
-            f"WHEN regexp_matches({expr}, '{match}') AND length({expr}) >= {min_len} "
-            f"THEN regexp_replace({expr}, '{strip}', '{repl}')"
-        )
-    parts.append(f"ELSE {expr} END")
-    return " ".join(parts)
-
-
-def lemmatize_tokens(col: Column, use_nltk: bool = False, lemmatizer_factory=None) -> Column:
+def lemmatize_tokens(name: str, use_nltk: bool = False, lemmatizer_factory=None) -> Column:
     """Lemmatize an array<string> column, noun-default (A20).
 
-    Default backend is the pure-Column rule table (JVM-side, codegen).
+    Default backend is the noun rule table (JVM-side, codegen).
     `use_nltk=True` switches to a WordNet pandas_udf when nltk is present —
     the vectorized seam the reference needed but ran row-at-a-time with a
     per-task corpus download (word_count.py:70-71, bug B6).
@@ -172,8 +246,8 @@ def lemmatize_tokens(col: Column, use_nltk: bool = False, lemmatizer_factory=Non
     that seam (tests use a fake built from the engine's own rule table).
     """
     if use_nltk or lemmatizer_factory is not None:
-        return _nltk_lemmatize_udf(lemmatizer_factory)(col)
-    return F.transform(col, lemmatize_token_col)
+        return _nltk_lemmatize_udf(lemmatizer_factory)(F.col(name))
+    return F.expr(_transform(_col(name), lemma_sql))
 
 
 def _lemmatize_batch(s, lemmatize_word):
@@ -210,16 +284,16 @@ def _nltk_lemmatize_udf(lemmatizer_factory=None):
 # The reference v2 job tags each token with nltk.pos_tag, maps the Penn
 # tag to a WordNet class, and lemmatizes with that class
 # (extract-keywords-from-abstracts/extract_keywords_from_all_abstracts.py:
-# 52-79). The engine compiles the same three stages to Catalyst Column
-# expressions: a suffix-heuristic tagger (adverb/verb/adjective/noun), the
+# 52-79). The engine compiles the same three stages to one CASE
+# expression: a suffix-heuristic tagger (adverb/verb/adjective/noun), the
 # Penn→WordNet map as data, and per-class detachment rules in the style of
 # WordNet's morphy (strip -ing/-ed with e-restoration for verbs; identity
 # for adjectives/adverbs whose tagged suffixes are already lemma forms;
 # the existing noun rule table otherwise). When nltk is installed the
 # real pos_tag+WordNet path is available behind the same interface
 # (`use_nltk=True`). Divergence from full WordNet (no lexicon lookup) is
-# deliberate and oracle-consistent: the DuckDB SQL mirror is generated
-# from the SAME rule tables.
+# deliberate and oracle-consistent: both dialects are compiled from the
+# SAME rule tables.
 
 # The reference's Penn→WordNet mapping (A19), verbatim as data:
 # J*→adjective, V*→verb, N*→noun, R*→adverb, else no tag.
@@ -242,7 +316,7 @@ def penn_to_wordnet(tag: str) -> str | None:
 # Suffix-heuristic POS classes on cleaned lowercase tokens (A18): adverb,
 # verb, adjective. Ordered; first match wins; a token matching none is a
 # noun and falls through to the plain lemmatizer, so the POS path strictly
-# refines it (see `lemmatize_token_pos_col`).
+# refines it (see `lemma_pos_sql`).
 POS_SUFFIX_RULES: tuple[tuple[str, str], ...] = (
     ("ly$", "r"),
     ("(ing|ed)$", "v"),
@@ -349,77 +423,50 @@ VERB_SUFFIX_RULES: tuple[tuple[str, str, int], ...] = (
 )
 
 
-def _verb_lemma_col(tok: Column) -> Column:
-    """Verb detachment chain as a Column (irregulars handled by caller)."""
-    expr = None
-    for pat, repl, min_len in VERB_SUFFIX_RULES:
-        cond = tok.rlike(pat) & (F.length(tok) >= min_len)
-        out = F.regexp_replace(tok, pat, repl)
-        expr = F.when(cond, out) if expr is None else expr.when(cond, out)
-    return expr.otherwise(tok)
+def _verb_lemma_sql(expr: str, dialect: str) -> str:
+    """The verb detachment rules (irregulars are the caller's)."""
+    rules = [(pat, pat, repl, min_len) for pat, repl, min_len in VERB_SUFFIX_RULES]
+    return _case(_suffix_whens(expr, rules, dialect), expr)
 
 
-def _verb_lemma_sql(expr: str) -> str:
-    parts = ["CASE"]
-    for pat, repl, min_len in VERB_SUFFIX_RULES:
-        duck_repl = repl.replace("$1", "\\1")
-        parts.append(
-            f"WHEN regexp_matches({expr}, '{pat}') AND length({expr}) >= {min_len} "
-            f"THEN regexp_replace({expr}, '{pat}', '{duck_repl}')"
-        )
-    parts.append(f"ELSE {expr} END")
-    return " ".join(parts)
-
-
-def lemmatize_token_pos_col(tok: Column) -> Column:
-    """POS-aware lemmatizer for one token (A21), pure Column.
+def lemma_pos_sql(expr: str, dialect: str = DUCKDB) -> str:
+    """POS-aware lemmatizer for one token (A21), as a CASE expression.
 
     Structure mirrors the reference's tagged path: classify (A18), map
     to a WordNet class (A19 — encoded in the branch order below), then
     lemmatize per class: adverbs/adjectives are identity (their tagged
     suffixes are lemma forms), verbs run the detachment rules, nouns run
-    the existing rule table.
+    the noun rule table.
     """
-    expr = None
-    for word, lemma in VERB_IRREGULAR:
-        cond = tok == F.lit(word)
-        expr = F.when(cond, F.lit(lemma)) if expr is None else expr.when(cond, F.lit(lemma))
-    expr = expr.when(tok.isin(*VERB_KEEP), tok)
-    expr = expr.when(tok.rlike(POS_SUFFIX_RULES[0][0]), tok)  # 'r': identity
-    expr = expr.when(tok.rlike(POS_SUFFIX_RULES[1][0]), _verb_lemma_col(tok))
-    expr = expr.when(tok.rlike(POS_SUFFIX_RULES[2][0]), tok)  # 'a': identity
-    return expr.otherwise(lemmatize_token_col(tok))
+    (adverb, _), (verb, _), (adjective, _) = POS_SUFFIX_RULES
+    whens = [
+        *_exact_whens(expr, VERB_IRREGULAR, dialect),
+        (f"{expr} IN ({stoplist_sql(VERB_KEEP, dialect)})", expr),
+        (_matches(expr, adverb, dialect), expr),
+        (_matches(expr, verb, dialect), _verb_lemma_sql(expr, dialect)),
+        (_matches(expr, adjective, dialect), expr),
+    ]
+    return _case(whens, lemma_sql(expr, dialect))
 
 
-def lemma_pos_sql(expr: str) -> str:
-    """The SAME POS-aware lemmatizer as ANSI SQL (DuckDB oracle mirror)."""
-    parts = ["CASE"]
-    for word, lemma in VERB_IRREGULAR:
-        parts.append(f"WHEN {expr} = '{word}' THEN '{lemma}'")
-    keep_list = ", ".join(f"'{w}'" for w in VERB_KEEP)
-    parts.append(f"WHEN {expr} IN ({keep_list}) THEN {expr}")
-    parts.append(f"WHEN regexp_matches({expr}, '{POS_SUFFIX_RULES[0][0]}') THEN {expr}")
-    parts.append(
-        f"WHEN regexp_matches({expr}, '{POS_SUFFIX_RULES[1][0]}') "
-        f"THEN {_verb_lemma_sql(expr)}"
-    )
-    parts.append(f"WHEN regexp_matches({expr}, '{POS_SUFFIX_RULES[2][0]}') THEN {expr}")
-    parts.append(f"ELSE {lemma_sql(expr)} END")
-    return " ".join(parts)
-
-
-def lemmatize_tokens_pos(col: Column, use_nltk: bool = False, backend_factory=None) -> Column:
+def lemmatize_tokens_pos(name: str, use_nltk: bool = False, backend_factory=None) -> Column:
     """POS-aware lemmatize over an array<string> column (A18+A19+A21).
 
-    Default backend is the pure-Column heuristic above. `use_nltk=True`
+    Default backend is the rule-table heuristic above. `use_nltk=True`
     swaps in the reference's exact nltk path (pos_tag → Penn→WordNet →
     tagged WordNetLemmatizer) as an Arrow-batched pandas_udf.
     `backend_factory` injects a fake (pos_tag, lemmatize_tagged) pair
     into the same seam for tests.
     """
+    return _pos_lemmas(_col(name), use_nltk, backend_factory)
+
+
+def _pos_lemmas(toks: str, use_nltk: bool = False, backend_factory=None) -> Column:
+    """The POS lemmas of `toks`, a Spark SQL array<string> expression:
+    the rule table's `transform`, or the nltk seam over it."""
     if use_nltk or backend_factory is not None:
-        return _nltk_pos_lemmatize_udf(backend_factory)(col)
-    return F.transform(col, lemmatize_token_pos_col)
+        return _nltk_pos_lemmatize_udf(backend_factory)(F.expr(toks))
+    return F.expr(_transform(toks, lemma_pos_sql))
 
 
 def _pos_lemmatize_batch(s, pos_tag, lemmatize_tagged):
@@ -468,25 +515,23 @@ def _nltk_pos_lemmatize_udf(backend_factory=None):
     return _lemmatize
 
 
-# --- composite: the reference keyword pipeline -----------------------------
+# --- composite: the reference keyword pipelines ----------------------------
 
 
-def keywords(
-    col: Column, stopwords: Sequence[str] = STOPWORDS, lemmatize: bool = True
-) -> Column:
+def keywords(name: str, stopwords: Sequence[str] = STOPWORDS, lemmatize: bool = True) -> Column:
     """abstract text → array of distinct, cleaned, non-stopword lemmas.
 
-    The whole v1 pipeline (word_count.py:41-65) as one Column expression:
+    The whole v1 pipeline (word_count.py:41-65) as one expression:
     clean → tokenize → stopword-diff → lemmatize → distinct.
     """
-    toks = remove_stopwords(tokenize(clean_text(col)), stopwords)
+    toks = _except_sql(_clean_tokens_sql(name), stopwords)
     if lemmatize:
-        toks = lemmatize_tokens(toks)
-    return distinct_tokens(toks)
+        toks = _transform(toks, lemma_sql)
+    return F.expr(f"array_distinct({toks})")
 
 
 def keywords_v2(
-    col: Column,
+    name: str,
     stopwords: Sequence[str] = MRC_STOPWORDS,
     use_nltk: bool = False,
 ) -> Column:
@@ -498,6 +543,5 @@ def keywords_v2(
     lemmatizing; v2 after, so inflections of stopwords — 'used', 'shown'
     — are caught by their lemma or by the list's own inflected entries).
     """
-    toks = tokenize(clean_text(col))
-    toks = lemmatize_tokens_pos(toks, use_nltk=use_nltk)
-    return F.array_except(toks, F.array(*[F.lit(w) for w in stopwords]))
+    lemmas = _pos_lemmas(_clean_tokens_sql(name), use_nltk)
+    return F.array_except(lemmas, F.expr(_stop_array_sql(stopwords)))

@@ -8,7 +8,8 @@ them into an RDD (:84), and a side-effecting foreach pages through
 Engine shape:
 * A1  work table  — the tiny driver-side discovery loop stays a loop (it
   is O(years×12) HTTP calls), but its result is a schema-explicit
-  DataFrame (fixing bug B1: 4-element rows under 3 column names).
+  DataFrame (fixing bug B1: 4-element rows under 3 column names), handed
+  over as Arrow rather than `parallelize`d, so scanning it runs no Python.
 * A2  pagination  — `sequence(0, total, page_size)` + explode: the page
   list is computed on executors, not the driver.
 * A3  fetch       — mapInPandas over the page table with BOUNDED retry
@@ -26,9 +27,13 @@ import time
 from collections.abc import Callable, Iterator
 
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from mrc_spark_jobs_pubmed_spark.pipeline.parse import reads_whole
 
 WORK_SCHEMA = T.StructType(
     [
@@ -155,13 +160,20 @@ def build_work_table(
     end_year: int,
     search: Callable[[int, int], tuple[str, int]] = mock_search,
 ) -> DataFrame:
-    """A1: (year, month) discovery loop → schema-explicit work table."""
-    rows = []
-    for year in range(begin_year, end_year + 1):
-        for month in range(1, 13):
-            url, total = search(year, month)
-            rows.append((year, month, url, total))
-    return spark.createDataFrame(rows, WORK_SCHEMA)
+    """A1: (year, month) discovery loop → schema-explicit work table.
+
+    The rows travel as an Arrow table, so the plan is a LocalRelation the
+    JVM scans by itself. (A Python list would become an RDD, and every
+    scan of it would start Python workers.)
+    """
+    rows = [
+        dict(zip(WORK_SCHEMA.names, (year, month, *search(year, month))))
+        for year in range(begin_year, end_year + 1)
+        for month in range(1, 13)
+    ]
+    return spark.createDataFrame(
+        pa.Table.from_pylist(rows, schema=to_arrow_schema(WORK_SCHEMA)), WORK_SCHEMA
+    )
 
 
 def expand_pages(work: DataFrame, page_size: int = PAGE_SIZE) -> DataFrame:
@@ -238,13 +250,22 @@ def fetch_pages(
     return src.mapInPandas(run, FETCH_SCHEMA)
 
 
+# The counters `observe_fetch` gathers, as a run reports them.
+FETCH_COUNTS = ("pages", "failed", "attempts")
+
+
 def observe_fetch(fetched: DataFrame, counts: Observation) -> DataFrame:
     """Count, inside whichever job consumes `fetched` (none of its own):
     pages fetched, pages whose retries ran out (payload NULL) and fetch
-    attempts. `counts.get` holds them once that job has finished."""
+    attempts (`FETCH_COUNTS`), and collect the keys of the pages that
+    came back with a payload the parser reads whole (`settled_keys`,
+    `parse.reads_whole`). `counts.get` holds them once that job has
+    finished."""
+    payload = F.col("payload")
     return fetched.observe(
         counts,
         F.count(F.lit(1)).alias("pages"),
-        F.count(F.when(F.col("payload").isNull(), 1)).alias("failed"),
+        F.count(F.when(payload.isNull(), 1)).alias("failed"),
         F.coalesce(F.sum("n_attempts"), F.lit(0)).alias("attempts"),
+        F.collect_set(F.when(reads_whole(payload), F.col("page_key"))).alias("settled_keys"),
     )

@@ -7,7 +7,7 @@ example: spark-pubmed-word-count/README.md:4-15).
 v2 (extract-keywords-from-abstracts/extract_keywords_from_all_abstracts.py):
 NDJSON articles → (pmid, keywords, year) CSV rows, POS-aware lemmas.
 
-Both are one `select` over the composable text pipeline
+Both are one `select` over the text pipeline's keyword expressions
 (functions/text.py) — the per-file Python closures (word_count.py:41-65)
 become Catalyst expressions end-to-end.
 """
@@ -37,7 +37,7 @@ V2_SCHEMA = T.StructType(
 def keywords_v1(articles: DataFrame) -> DataFrame:
     """(word, pmid) pairs — the reference v1 output shape (A25)."""
     return articles.select(
-        F.explode(TX.keywords(F.col("abstract"))).alias("word"), "pmid"
+        F.explode(TX.keywords("abstract")).alias("word"), "pmid"
     )
 
 
@@ -49,7 +49,7 @@ def keywords_v2(articles: DataFrame, use_nltk: bool = False) -> DataFrame:
     accumulation). POS path: suffix tagger → Penn→WordNet map → tagged
     detachment rules (functions/text.py A18/A19/A21); `use_nltk=True`
     swaps in the reference's exact nltk backend when installed."""
-    kw = TX.keywords_v2(F.col("abstract"), use_nltk=use_nltk)
+    kw = TX.keywords_v2("abstract", use_nltk=use_nltk)
     return articles.select(
         "pmid",
         F.concat_ws(" ", F.array_sort(kw)).alias("keywords"),

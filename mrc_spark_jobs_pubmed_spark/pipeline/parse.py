@@ -13,7 +13,7 @@ A12 (key-derived year column).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -26,6 +26,29 @@ ARTICLE_JSON_SCHEMA = T.StructType(
         ),
     ]
 )
+
+# The rows `parse_articles` yields, for reading a written articles sink
+# back without an inference job.
+ARTICLES_SCHEMA = T.StructType(
+    [
+        T.StructField("pmid", T.StringType()),
+        T.StructField("year", T.IntegerType(), False),
+        T.StructField("abstract", T.StringType()),
+        T.StructField("page_key", T.StringType(), False),
+    ]
+)
+
+
+def reads_whole(payload: Column) -> Column:
+    """Whether every non-blank line of the NDJSON `payload` parses to a
+    record with a pmid, so `parse_articles` has read the whole page even
+    if it yields no article (an empty page, or none with an abstract).
+    False for a body that is not NDJSON records (an HTML error page, a
+    truncated line); NULL for a NULL payload."""
+    lines = F.filter(F.split(payload, "\n"), lambda line: F.trim(line) != "")
+    return F.forall(
+        lines, lambda line: F.from_json(line, ARTICLE_JSON_SCHEMA)["pmid"].isNotNull()
+    )
 
 
 def parse_articles(fetched: DataFrame, require_abstract: bool = True) -> DataFrame:

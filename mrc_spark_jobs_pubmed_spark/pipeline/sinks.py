@@ -6,7 +6,10 @@ Reference mechanisms replaced here:
 * A5  skip-if-exists guards (4 copies across the jobs)    → an anti-join
   of the work list against the sink's already-written keys, ahead of the
   fetch — one declarative resume rule instead of a per-task HTTP
-  existence check. The keyword jobs' copies (word_count.py:78-81,
+  existence check. Keys whose fetch is settled but yielded no row are
+  kept in a small ledger inside the sink, so they are not fetched again; when no
+  key is missing the resume costs one JVM-side `isEmpty` and no fetch or
+  write. The keyword jobs' copies (word_count.py:78-81,
   extract_keywords_from_all_abstracts.py:85-87) become `derived_write`:
   a table derived from a sink is rewritten only when that sink's files
   changed since the table was last written.
@@ -20,10 +23,18 @@ filesystem, so the sinks hold on any store Spark can write to.
 from __future__ import annotations
 
 import hashlib
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
-from pyspark.sql import DataFrame, SparkSession
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
+
+# The directory inside an idempotent sink that lists the keys that were
+# produced but yielded no row. Spark, pyarrow and `part-*` globs skip
+# `_`-prefixed names, so readers of the sink never see it.
+LEDGER = "_keys_without_rows"
 
 
 def _hadoop_path(spark: SparkSession, path: str):
@@ -51,8 +62,9 @@ def write_partitioned(
 
 
 def existing_keys(spark: SparkSession, path: str, key: T.StructField) -> DataFrame | None:
-    """The `key` column of the parquet sink at `path`; None when nothing
-    was ever written there.
+    """The `key` values settled at the parquet sink at `path`: those of
+    its rows, and those its `LEDGER` records as having yielded none; None
+    when nothing was ever written there.
 
     Absent means the path does not exist on its own filesystem. The
     schema is given, so a directory that holds no data files reads as an
@@ -64,7 +76,14 @@ def existing_keys(spark: SparkSession, path: str, key: T.StructField) -> DataFra
     fs, jpath = _hadoop_path(spark, path)
     if not fs.exists(jpath):
         return None
-    return spark.read.schema(T.StructType([key])).parquet(path)
+    schema = T.StructType([key])
+    done = spark.read.schema(schema).parquet(path).select(key.name)
+    ledger = spark._jvm.org.apache.hadoop.fs.Path(jpath, LEDGER)
+    if fs.exists(spark._jvm.org.apache.hadoop.fs.Path(ledger, "_SUCCESS")):
+        # Spark skips a `_`-named path even when asked for it, so name its files
+        parts = f"{ledger.toString()}/part-*"
+        done = done.unionByName(spark.read.schema(schema).parquet(parts))
+    return done
 
 
 def idempotent_write(
@@ -73,31 +92,54 @@ def idempotent_write(
     spark: SparkSession,
     path: str,
     key_col: str,
+    schema: T.StructType,
     partition_by: tuple[str, ...] = (),
-) -> DataFrame:
-    """A5 as dataflow: produce and append rows only for keys not yet in
-    the sink, and return the whole sink.
+    settled: Callable[[], Iterable] = tuple,
+) -> tuple[DataFrame, bool, frozenset]:
+    """A5 as dataflow: produce and append rows only for keys not yet
+    settled at the sink; return (the whole sink, appended, the keys
+    ledgered by this call).
 
-    `keys` is anti-joined against the sink's `key_col` values *before*
+    `keys` is anti-joined against the sink's settled keys *before*
     `produce` sees it, so on a resume the expensive stage behind
     `produce` (the page fetch) runs only for the missing keys — the
     reference's skip-if-exists guard ahead of the HTTP call, as one join
-    instead of a per-task existence check. `produce(todo)` is appended in
-    a single write job with no counting action, so its lineage runs once.
-    The sink is read back with `produce`'s schema: downstream stages read
-    what landed, not a second evaluation of `produce`. A key whose
-    `produce` rows are all filtered out leaves no trace in the sink, so
-    the next run produces it again (a page whose retries ran out is
-    fetched again; so is a page with no article that has an abstract).
+    instead of a per-task existence check. When the sink exists and no
+    key is missing, one JVM-side `isEmpty` over the anti-join says so, and
+    nothing is produced or appended. Otherwise `produce(todo)` is appended
+    in a single write job with no counting action, so its lineage runs
+    once; a sink that did not exist is written even with no key, so it
+    reads back empty. Either way the sink is read back with `schema`, the
+    schema of `produce`'s rows: downstream stages read what landed, not a
+    second evaluation of `produce`, and no inference job runs.
 
-    Works at any scale: the done-key set is a column-pruned parquet scan,
-    and the anti-join broadcasts it when small.
+    `settled`, called after the append, names the keys `produce` is done
+    with whether or not they yielded rows (for the pipeline: pages the
+    parser read whole, unlike a page whose retries ran out or whose body
+    is not NDJSON, which the next run fetches again). Those that landed no
+    row are appended to the sink's `LEDGER`, which the next anti-join also
+    reads, so such a key is produced once, not on every run. The keys that
+    landed are collected by an `observe` on the append itself, so when
+    every settled key landed a row the ledger costs no job.
+
+    Works at any scale: the settled-key set is a column-pruned parquet
+    scan, and the anti-join broadcasts it when small.
     """
     done = existing_keys(spark, path, keys.schema[key_col])
     todo = keys if done is None else keys.join(done, key_col, "left_anti")
-    out = produce(todo)
-    write_partitioned(out, path, partition_by, mode="append")
-    return spark.read.schema(out.schema).parquet(path)
+    if done is not None and todo.isEmpty():
+        return spark.read.schema(schema).parquet(path), False, frozenset()
+    landed = Observation()
+    rows = produce(todo).observe(landed, F.collect_set(key_col).alias("keys"))
+    write_partitioned(rows, path, partition_by, mode="append")
+    barren = frozenset(settled()) - frozenset(landed.get["keys"])
+    if barren:
+        ledger_schema = T.StructType([keys.schema[key_col]])
+        ledger = pa.Table.from_pylist(
+            [{key_col: k} for k in sorted(barren)], schema=to_arrow_schema(ledger_schema)
+        )
+        write_partitioned(spark.createDataFrame(ledger, ledger_schema), f"{path}/{LEDGER}")
+    return spark.read.schema(schema).parquet(path), True, barren
 
 
 def derived_write(

@@ -36,6 +36,15 @@ indistinguishable from an attribute ref and still normalizes away; a
 constant-only replan of that narrow class fingerprints identically.
 Plain numeric/string body literals survive (the \\d+L rule keeps the
 digits, only stripping the resolution-state-dependent L suffix).
+
+Lambda variables render as `lambda x_N#id`, and only the `#id` is
+stripped: N comes from a JVM-wide counter that every higher-order
+function's lambda advances (`F.transform`, `F.filter`, and the text
+functions' SQL `transform`, which name their variable from the same
+counter). A fingerprint therefore depends on the lambdas built before
+it: adding or removing a lambda in one query shifts the pins of every
+lambda-using query built after it (`fingerprint_registry` builds in
+name order).
 """
 
 from __future__ import annotations

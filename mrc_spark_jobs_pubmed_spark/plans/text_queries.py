@@ -1,9 +1,10 @@
 """Text-pipeline queries over `documents` — the reference's keyword jobs
 (SURVEY.md §2 A13-A25) completed with the aggregations they never had.
 
-The DuckDB oracle SQL is generated from the SAME rule tables
-(CLEAN_PASSES, STOPWORDS, lemma rules) as the Spark Column expressions, so
-both engines execute identical semantics.
+The Spark expressions and the DuckDB oracle SQL are compiled from the SAME
+rule tables (CLEAN_PASSES, the stopword lists, the lemma rules; one
+compiler per table in functions/text.py, two dialects), so both engines
+execute identical semantics.
 """
 
 from __future__ import annotations
@@ -14,17 +15,17 @@ from pyspark.sql import functions as F
 from mrc_spark_jobs_pubmed_spark.functions import text as TX
 from mrc_spark_jobs_pubmed_spark.functions.stopwords import MRC_STOPWORDS, STOPWORDS
 from mrc_spark_jobs_pubmed_spark.functions.text import (
-    clean_text,
     clean_text_sql,
+    clean_tokens,
     keywords,
     lemma_pos_sql,
     lemma_sql,
-    tokenize,
+    stoplist_sql,
 )
 from mrc_spark_jobs_pubmed_spark.plans.registry import register
 from mrc_spark_jobs_pubmed_spark.sources.catalog import load_table
 
-_STOPLIST_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
+_STOPLIST_SQL = stoplist_sql(STOPWORDS)
 
 # Long-format keyword extraction shared by the queries below: the SQL mirror
 # of clean → tokenize → stopword-diff → lemmatize → per-doc distinct.
@@ -44,7 +45,7 @@ _KEYWORDS_CTE = f"""
 def _keywords_long(spark: SparkSession, sf_dir: str) -> DataFrame:
     """documents → (doc_id, word) long format, the engine-side kw table."""
     docs = load_table(spark, "documents", sf_dir)
-    return docs.select("doc_id", F.explode(keywords(F.col("text"))).alias("word"))
+    return docs.select("doc_id", F.explode(keywords("text")).alias("word"))
 
 
 @register(
@@ -128,7 +129,7 @@ FROM documents
 )
 def text_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    toks = tokenize(clean_text(F.col("text")))
+    toks = clean_tokens("text")
     return docs.select(
         "doc_id",
         F.length("text").alias("n_chars_raw"),
@@ -181,9 +182,7 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # --- keywords v2: POS-aware lemmas + mrc domain stopword list ---------------
 
-_MRC_STOPLIST_SQL = ", ".join(
-    "'" + w.replace("'", "''") + "'" for w in MRC_STOPWORDS
-)
+_MRC_STOPLIST_SQL = stoplist_sql(MRC_STOPWORDS)
 
 
 @register(
@@ -216,7 +215,7 @@ GROUP BY doc_id
 )
 def text_keywords_v2(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, "documents", sf_dir)
-    kw = TX.keywords_v2(F.col("text"))
+    kw = TX.keywords_v2("text")
     return (
         docs.select("doc_id", F.explode(kw).alias("word"))
         .distinct()

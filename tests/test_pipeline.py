@@ -5,7 +5,9 @@ keywords v1/v2 → idempotent partitioned sinks."""
 from __future__ import annotations
 
 import json
+import threading
 
+import pyarrow.dataset as pads
 import pytest
 from pyspark.sql import functions as F
 
@@ -115,12 +117,14 @@ def test_idempotent_write_skips_done_keys(spark, tmp_path):
         return todo.join(values, "k")
 
     keys = spark.createDataFrame([(1,), (2,)], ["k"])
-    assert sinks.idempotent_write(keys, produce, spark, out, "k").count() == 2
+    sink, appended, ledgered = sinks.idempotent_write(keys, produce, spark, out, "k", values.schema)
+    assert appended and not ledgered and sink.count() == 2
     # re-run with one new key: only the new key is produced, and it lands
     keys2 = spark.createDataFrame([(2,), (3,)], ["k"])
-    sink = sinks.idempotent_write(keys2, produce, spark, out, "k")
+    sink, appended, _ = sinks.idempotent_write(keys2, produce, spark, out, "k", values.schema)
     assert received == [[1, 2], [3]]
-    assert sink.count() == 3 and spark.read.parquet(out).count() == 3
+    assert appended and sink.count() == 3 and spark.read.parquet(out).count() == 3
+    assert sink.columns == ["k", "v"]
 
 
 def _n_pages(year: int) -> int:
@@ -195,12 +199,12 @@ def test_fetch_once_per_page_and_resume_fetches_nothing(spark, tmp_path, as_path
     # one call per page plus the one rate-limited attempt, across all
     # four sink writes: the fetch lineage runs once
     assert calls.value == n_pages + 1
-    assert fresh["ingest"] == {"pages": n_pages, "failed": 0, "attempts": n_pages + 1}
+    assert fresh["ingest"] == {"pages": n_pages, "failed": 0, "attempts": n_pages + 1, "barren": 0}
     n_articles = spark.read.parquet(f"{out}/articles").count()
 
     resume = run_pipeline(spark, out, 2020, 2020, fetcher=fetcher)
     assert calls.value == n_pages + 1  # every page is done: no fetch at all
-    assert resume["ingest"] == {"pages": 0, "failed": 0, "attempts": 0}
+    assert resume["ingest"] == {"pages": 0, "failed": 0, "attempts": 0, "barren": 0}
     assert spark.read.parquet(f"{out}/articles").count() == n_articles
     assert resume["keywords_v2"].count() == n_articles
 
@@ -211,7 +215,7 @@ def test_resume_refetches_page_whose_retries_ran_out(spark, tmp_path):
     calls = spark.sparkContext.accumulator(0)
     down = _counting_fetcher(calls, _FIRST_PAGE, limited_attempts=99)
     first = run_pipeline(spark, out, 2020, 2020, fetcher=down)
-    assert first["ingest"] == {"pages": n_pages, "failed": 1, "attempts": n_pages + 4}
+    assert first["ingest"] == {"pages": n_pages, "failed": 1, "attempts": n_pages + 4, "barren": 0}
     arts = spark.read.parquet(f"{out}/articles")
     assert arts.filter(F.col("page_key") == "2020_1_num_0").count() == 0
     assert arts.select("page_key").distinct().count() == n_pages - 1
@@ -220,7 +224,7 @@ def test_resume_refetches_page_whose_retries_ran_out(spark, tmp_path):
     healthy = _counting_fetcher(calls, _FIRST_PAGE, limited_attempts=0)
     resume = run_pipeline(spark, out, 2020, 2020, fetcher=healthy)
     assert calls.value - c0 == 1  # only the failed page is fetched again
-    assert resume["ingest"] == {"pages": 1, "failed": 0, "attempts": 1}
+    assert resume["ingest"] == {"pages": 1, "failed": 0, "attempts": 1, "barren": 0}
     arts = spark.read.parquet(f"{out}/articles")
     assert arts.filter(F.col("page_key") == "2020_1_num_0").count() > 0
     assert arts.select("page_key").distinct().count() == n_pages
@@ -258,9 +262,9 @@ def test_resume_after_crash_before_keyword_writes_rewrites_them(spark, tmp_path,
     # a run that appended one new page's articles and died before its
     # keyword writes: the articles sink changed behind the keyword tables
     page = ingest.expand_pages(ingest.build_work_table(spark, 2021, 2021)).limit(1)
-    arts = sinks.idempotent_write(
+    arts, _, _ = sinks.idempotent_write(
         page, lambda todo: parse.parse_articles(ingest.fetch_pages(todo)), spark,
-        f"{out}/articles", "page_key", partition_by=("year",),
+        f"{out}/articles", "page_key", parse.ARTICLES_SCHEMA, partition_by=("year",),
     )
     assert arts.filter(F.col("year") == 2021).count() > 0
 
@@ -280,8 +284,163 @@ def test_pipeline_with_no_pages_writes_empty_sinks(spark, tmp_path):
     out = str(tmp_path / "pm")
     for _ in range(2):
         dfs = run_pipeline(spark, out, 2020, 2020, search=lambda y, m: (f"x://{y}-{m}", 0))
-        assert dfs["ingest"] == {"pages": 0, "failed": 0, "attempts": 0}
+        assert dfs["ingest"] == {"pages": 0, "failed": 0, "attempts": 0, "barren": 0}
         assert dfs["articles"].count() == 0 and dfs["keywords_v2"].count() == 0
+
+
+def test_work_table_is_scanned_by_the_jvm(spark):
+    """The work table is a LocalRelation, so neither it nor the page list
+    built on it starts a Python worker when scanned. A `createDataFrame`
+    that fell back to a Python list would plan `Scan ExistingRDD`, an RDD
+    whose every scan runs Python tasks."""
+    work = ingest.build_work_table(spark, 2019, 2020)
+    for df in (work, ingest.expand_pages(work)):
+        plan = _physical(df)
+        assert "LocalTableScan" in plan and "ExistingRDD" not in plan
+    assert ingest.build_work_table(spark, 2021, 2020).count() == 0
+
+
+def _files(root) -> dict[str, float]:
+    """{path relative to root: mtime} of every file under a local dir."""
+    return {str(p.relative_to(root)): p.stat().st_mtime for p in root.rglob("*") if p.is_file()}
+
+
+def _within(seconds: float, fn):
+    """fn(), failing instead of hanging when it does not return in time."""
+    box: dict = {}
+
+    def run():
+        try:
+            box["out"] = fn()
+        except BaseException as exc:  # re-raised below, on the test's thread
+            box["err"] = exc
+
+    t = threading.Thread(target=run, daemon=True)
+    t.start()
+    t.join(seconds)
+    if "err" in box:
+        raise box["err"]
+    assert "out" in box, f"still running after {seconds} s"
+    return box["out"]
+
+
+@_PATH_FORMS
+def test_resume_with_no_missing_page_fetches_and_appends_nothing(spark, tmp_path, as_path):
+    out = as_path(tmp_path / "pm")
+    calls = spark.sparkContext.accumulator(0)
+    fetcher = _counting_fetcher(calls, _FIRST_PAGE, limited_attempts=0)
+    run_pipeline(spark, out, 2020, 2020, fetcher=fetcher)
+    articles = tmp_path / "pm" / "articles"
+    before, c0 = _files(articles), calls.value
+    assert any(name.startswith("year=") and "/part-" in name for name in before)
+
+    # `ingest` must not wait on a fetch job that never ran
+    resume = _within(120, lambda: run_pipeline(spark, out, 2020, 2020, fetcher=fetcher))
+    assert calls.value == c0
+    assert resume["ingest"] == {"pages": 0, "failed": 0, "attempts": 0, "barren": 0}
+    assert _files(articles) == before  # no part file added, _SUCCESS untouched
+    assert resume["articles"].count() == spark.read.parquet(f"{out}/articles").count()
+
+
+@_PATH_FORMS
+def test_resume_fetches_only_the_missing_page_once(spark, tmp_path, as_path):
+    out = as_path(tmp_path / "pm")
+    calls = spark.sparkContext.accumulator(0)
+    fetcher = _counting_fetcher(calls, _FIRST_PAGE, limited_attempts=0)
+
+    def december(total):  # a month whose records appear after the first run
+        def search(year, month):
+            url, records = ingest.mock_search(year, month)
+            return url, total if month == 12 else records
+
+        return search
+
+    run_pipeline(spark, out, 2020, 2020, search=december(0), fetcher=fetcher)
+    articles = tmp_path / "pm" / "articles"
+    parts = {k: v for k, v in _files(articles).items() if "/part-" in k}
+    c0 = calls.value
+
+    resume = run_pipeline(spark, out, 2020, 2020, search=december(5_000), fetcher=fetcher)
+    assert calls.value - c0 == 1
+    assert resume["ingest"] == {"pages": 1, "failed": 0, "attempts": 1, "barren": 0}
+    assert parts.items() <= _files(articles).items()  # appended, nothing rewritten
+    arts = spark.read.parquet(f"{out}/articles")
+    assert arts.filter(F.col("page_key") == "2020_12_num_0").count() > 0
+    assert arts.count() == arts.select("pmid").distinct().count()
+
+
+@_PATH_FORMS
+def test_page_that_lands_no_article_is_fetched_once(spark, tmp_path, as_path):
+    """A page whose only article has no abstract, and an empty page, land
+    no article; the sink's ledger records them, so no resume fetches them
+    again, and readers of the sink do not see the ledger."""
+    out = as_path(tmp_path / "pm")
+    n_pages = _n_pages(2020)
+    calls = spark.sparkContext.accumulator(0)
+    no_abstract = ingest.mock_search(2020, 1)[0] + "&retstart=0"
+    empty = ingest.mock_search(2020, 2)[0] + "&retstart=0"
+
+    def fetcher(url: str) -> str:
+        calls.add(1)
+        if url == no_abstract:
+            return json.dumps({"pmid": "1", "medent": {}})
+        return "" if url == empty else ingest.mock_fetcher(url)
+
+    fresh = run_pipeline(spark, out, 2020, 2020, fetcher=fetcher)
+    assert calls.value == n_pages
+    assert fresh["ingest"] == {"pages": n_pages, "failed": 0, "attempts": n_pages, "barren": 2}
+    barren = ["2020_1_num_0", "2020_2_num_0"]
+    ledger = spark.read.parquet(f"{out}/articles/{sinks.LEDGER}/part-*")
+    assert sorted(r.page_key for r in ledger.collect()) == barren
+    articles = tmp_path / "pm" / "articles"
+    before = _files(articles)
+
+    for _ in range(2):
+        resume = run_pipeline(spark, out, 2020, 2020, fetcher=fetcher)
+        assert calls.value == n_pages
+        assert resume["ingest"] == {"pages": 0, "failed": 0, "attempts": 0, "barren": 0}
+        assert _files(articles) == before
+
+    arts = spark.read.parquet(f"{out}/articles")
+    assert arts.select("page_key").distinct().count() == n_pages - 2
+    assert not any(sinks.LEDGER in f for f in pads.dataset(
+        str(articles), format="parquet", partitioning="hive").files)
+
+
+def test_page_whose_body_does_not_parse_is_fetched_again(spark, tmp_path):
+    """A body that is not NDJSON records (an HTML error page with no
+    retry marker) lands no article but goes to no ledger either: each
+    resume fetches it again, until a good body lands its articles."""
+    out = str(tmp_path / "pm")
+    n_pages = _n_pages(2020)
+    calls = spark.sparkContext.accumulator(0)
+    html = ingest.mock_search(2020, 3)[0] + "&retstart=0"
+
+    def fetcher(url: str) -> str:
+        calls.add(1)
+        return "<html><body>502 Bad Gateway</body></html>" if url == html else (
+            ingest.mock_fetcher(url))
+
+    fresh = run_pipeline(spark, out, 2020, 2020, fetcher=fetcher)
+    assert fresh["ingest"] == {"pages": n_pages, "failed": 0, "attempts": n_pages, "barren": 0}
+    assert not (tmp_path / "pm" / "articles" / sinks.LEDGER).exists()
+    parts = {k: v for k, v in _files(tmp_path / "pm" / "articles").items() if "/part-" in k}
+
+    resume = run_pipeline(spark, out, 2020, 2020, fetcher=fetcher)
+    assert calls.value == n_pages + 1
+    assert resume["ingest"] == {"pages": 1, "failed": 0, "attempts": 1, "barren": 0}
+    assert {k: v for k, v in _files(tmp_path / "pm" / "articles").items()
+            if "/part-" in k} == parts
+
+    run_pipeline(spark, out, 2020, 2020)  # the source recovered
+    arts = spark.read.parquet(f"{out}/articles")
+    assert arts.filter(F.col("page_key") == "2020_3_num_0").count() > 0
+    assert arts.select("page_key").distinct().count() == n_pages
+
+
+def test_parse_yields_the_declared_articles_schema(spark):
+    pages = ingest.expand_pages(ingest.build_work_table(spark, 2020, 2020)).limit(1)
+    assert parse.parse_articles(ingest.fetch_pages(pages)).schema == parse.ARTICLES_SCHEMA
 
 
 def test_resume_on_corrupt_sink_raises_instead_of_reappending(spark, tmp_path):

@@ -22,52 +22,56 @@ GOLDEN_WORDS = {"article", "review", "different", "publication", "breast", "canc
 
 def test_golden_example(spark):
     df = spark.createDataFrame([(GOLDEN_PMID, GOLDEN_ABSTRACT)], ["pmid", "abstract"])
-    out = df.select("pmid", F.explode(keywords(F.col("abstract"))).alias("word"))
+    out = df.select("pmid", F.explode(keywords("abstract")).alias("word"))
     rows = {(r.word, r.pmid) for r in out.collect()}
     assert rows == {(w, GOLDEN_PMID) for w in GOLDEN_WORDS}
 
 
 def test_clean_strips_punct_digits_and_lowercases(spark):
     df = spark.createDataFrame([("Ab-1, C3d; e_f!",)], ["t"])
-    assert df.select(clean_text(F.col("t")).alias("c")).first().c == "ab c d e f"
+    assert df.select(clean_text("t").alias("c")).first().c == "ab c d e f"
 
 
 def test_tokenize_drops_empty(spark):
     df = spark.createDataFrame([("  a  b ",), ("",)], ["t"])
-    got = [r.toks for r in df.select(tokenize(F.trim(F.col("t"))).alias("toks")).collect()]
+    trimmed = df.select(F.trim("t").alias("t"))
+    got = [r.toks for r in trimmed.select(tokenize("t").alias("toks")).collect()]
     assert got == [["a", "b"], []]
 
 
 def test_stopword_filter_is_subset_and_dedups(spark):
     df = spark.createDataFrame([(["the", "cat", "cat", "sat"],)], ["w"])
-    got = df.select(remove_stopwords(F.col("w")).alias("w")).first().w
+    got = df.select(remove_stopwords("w").alias("w")).first().w
     assert sorted(got) == ["cat", "sat"]
 
 
+NOUN_LEMMA_CASES = {
+    "publications": "publication",
+    "men": "man",
+    "studies": "study",
+    "classes": "class",
+    "branches": "branch",
+    "boxes": "box",
+    "species": "species",
+    "diabetes": "diabetes",
+    "status": "status",
+    "press": "press",
+    "cat": "cat",
+    "is": "is",
+}
+
+
 def test_lemmatizer_rules(spark):
-    cases = {
-        "publications": "publication",
-        "men": "man",
-        "studies": "study",
-        "classes": "class",
-        "branches": "branch",
-        "boxes": "box",
-        "species": "species",
-        "diabetes": "diabetes",
-        "status": "status",
-        "press": "press",
-        "cat": "cat",
-        "is": "is",
-    }
+    cases = NOUN_LEMMA_CASES
     df = spark.createDataFrame([(list(cases),)], ["w"])
-    got = df.select(lemmatize_tokens(F.col("w")).alias("w")).first().w
+    got = df.select(lemmatize_tokens("w").alias("w")).first().w
     assert dict(zip(cases, got)) == cases
 
 
 def test_cleaning_is_idempotent(spark):
     df = spark.createDataFrame([("Mixed CASE 42 text!",), ("already clean",)], ["t"])
-    once = df.select(clean_text(F.col("t")).alias("c"))
-    twice = once.select(clean_text(F.col("c")).alias("c"))
+    once = df.select(clean_text("t").alias("c"))
+    twice = once.select(clean_text("c").alias("c"))
     assert [r.c for r in once.collect()] == [r.c for r in twice.collect()]
 
 
@@ -148,24 +152,55 @@ def test_pos_lemmatizer_rules(spark):
 
     toks = sorted(POS_LEMMA_CASES)
     df = spark.createDataFrame([(toks,)], ["w"])
-    got = df.select(lemmatize_tokens_pos(F.col("w")).alias("w")).first().w
+    got = df.select(lemmatize_tokens_pos("w").alias("w")).first().w
     assert dict(zip(toks, got)) == {t: POS_LEMMA_CASES[t] for t in toks}
+
+
+# input → cleaned text; non-ASCII letters are stripped like punctuation
+CLEAN_CASES = {
+    "Ab-1, C3d; e_f!": "ab c d e f",
+    "Mixed CASE 42 text!": "mixed case text",
+    "  already clean  ": "already clean",
+    "&lt;b&gt; tag": "lt b gt tag",
+    "tab\tand\nnewline": "tab and newline",
+    "über 3.5% Ärzte": "ber rzte",
+    "": "",
+}
 
 
 def test_pos_lemma_sql_mirror_matches_column(spark):
-    """The generated DuckDB SQL must implement the SAME rules as the
-    Column expression, token by token."""
+    """Each rule table compiles to a Spark dialect (the engine's
+    expression) and a DuckDB dialect (the oracle's): both must give the
+    expected output, input by input — clean passes, noun lemmas and POS
+    lemmas — and both stopword lists must come back word for word."""
     import duckdb
 
-    from mrc_spark_jobs_pubmed_spark.functions.text import lemma_pos_sql
-
-    toks = sorted(POS_LEMMA_CASES)
-    rel = duckdb.sql(
-        "SELECT " + lemma_pos_sql("tok") + " AS lemma "
-        "FROM (SELECT unnest(" + str(toks) + ") AS tok)"
+    from mrc_spark_jobs_pubmed_spark.functions.stopwords import MRC_STOPWORDS, STOPWORDS
+    from mrc_spark_jobs_pubmed_spark.functions.text import (
+        clean_text_sql,
+        lemma_pos_sql,
+        lemma_sql,
+        stoplist_sql,
     )
-    got = [r[0] for r in rel.fetchall()]
-    assert dict(zip(toks, got)) == {t: POS_LEMMA_CASES[t] for t in toks}
+
+    for compile_sql, cases in (
+        (clean_text_sql, CLEAN_CASES),
+        (lemma_sql, NOUN_LEMMA_CASES),
+        (lemma_pos_sql, POS_LEMMA_CASES),
+    ):
+        df = spark.createDataFrame([(t,) for t in cases], "tok string")
+        on_spark = dict(df.select("tok", F.expr(compile_sql("tok", "spark"))).collect())
+        on_duck = dict(duckdb.execute(
+            f"SELECT tok, {compile_sql('tok')} FROM (SELECT unnest(?::VARCHAR[]) AS tok)",
+            [list(cases)],
+        ).fetchall())
+        assert on_spark == cases, compile_sql.__name__
+        assert on_duck == cases, compile_sql.__name__
+
+    for words in (STOPWORDS, MRC_STOPWORDS):
+        on_spark = spark.range(1).select(F.expr(f"array({stoplist_sql(words, 'spark')})"))
+        assert on_spark.first()[0] == list(words)
+        assert duckdb.execute(f"SELECT [{stoplist_sql(words)}]").fetchone()[0] == list(words)
 
 
 def test_keywords_v2_golden(spark):
@@ -198,7 +233,7 @@ def test_keywords_v2_golden(spark):
 # never run in this container (no nltk). Their Arrow-batch kernels and DI
 # seams are contract-tested here with fakes: batching + None handling +
 # ArrayType(StringType) schema + Penn→WordNet branch parity against the
-# Column backend on the golden example.
+# rule-table backend on the golden example.
 
 import re as _re
 
@@ -214,7 +249,8 @@ from mrc_spark_jobs_pubmed_spark.functions.text import (
 
 
 def _py_noun_lemma(tok: str) -> str:
-    """Pure-Python mirror of lemmatize_token_col, from the SAME rule data."""
+    """Pure-Python mirror of the noun rule table (`lemma_sql`), from the
+    SAME rule data."""
     for plural, singular in LEMMA_IRREGULAR:
         if tok == plural:
             return singular
@@ -286,15 +322,19 @@ def test_pos_lemmatize_batch_penn_to_wordnet_branches():
 
 
 def test_nltk_lemma_seam_spark_parity_with_column_backend(spark):
-    """The injected-fake pandas_udf path must agree with the Column rule
-    table on the golden example — same rule data, two executions."""
+    """The injected-fake pandas_udf path must agree with the rule-table
+    backend on the golden example — same rule data, two executions."""
     from pyspark.sql import types as T
 
     df = spark.createDataFrame([(GOLDEN_PMID, GOLDEN_ABSTRACT)], ["pmid", "abstract"])
-    toks = remove_stopwords(tokenize(clean_text(F.col("abstract"))))
-    out = df.select(
-        lemmatize_tokens(toks).alias("col_backend"),
-        lemmatize_tokens(toks, lemmatizer_factory=_FakeWordNetLemmatizer).alias("udf_backend"),
+    toks = (
+        df.select(clean_text("abstract").alias("t"))
+        .select(tokenize("t").alias("t"))
+        .select(remove_stopwords("t").alias("toks"))
+    )
+    out = toks.select(
+        lemmatize_tokens("toks").alias("col_backend"),
+        lemmatize_tokens("toks", lemmatizer_factory=_FakeWordNetLemmatizer).alias("udf_backend"),
     )
     assert out.schema["udf_backend"].dataType == T.ArrayType(T.StringType())
     row = out.first()
@@ -309,7 +349,7 @@ def test_nltk_pos_seam_spark_schema_and_branches(spark):
         [(["quickly", "running", "studies", "and"],), (None,)], "toks: array<string>"
     )
     out = df.select(
-        lemmatize_tokens_pos(F.col("toks"), backend_factory=_fake_pos_backend).alias("lem")
+        lemmatize_tokens_pos("toks", backend_factory=_fake_pos_backend).alias("lem")
     )
     assert out.schema["lem"].dataType == T.ArrayType(T.StringType())
     rows = out.collect()

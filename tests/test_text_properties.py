@@ -1,8 +1,7 @@
 """Property-based checks for the text pipeline (SURVEY.md §5 item 3).
 
 Hypothesis drives arbitrary (including adversarial unicode) inputs
-through the Column-expression pipeline in one Spark job per example
-batch: cleaning idempotence, tokenizer shape, stopword-filter and
+through the text functions in one Spark job per example batch: cleaning idempotence, tokenizer shape, stopword-filter and
 dedup set invariants. Batching examples into a single DataFrame keeps
 the suite fast (one Spark action per property, not per example).
 """
@@ -11,7 +10,6 @@ from __future__ import annotations
 
 from hypothesis import given, settings
 from hypothesis import strategies as st
-from pyspark.sql import functions as F
 
 from mrc_spark_jobs_pubmed_spark.functions import text as X
 from mrc_spark_jobs_pubmed_spark.functions.stopwords import STOPWORDS
@@ -19,20 +17,20 @@ from mrc_spark_jobs_pubmed_spark.functions.stopwords import STOPWORDS
 texts = st.lists(st.text(max_size=80), min_size=1, max_size=25)
 
 
-def _pipe(spark, samples, *cols):
-    df = spark.createDataFrame([(s,) for s in samples], ["raw"])
-    return df.select(*cols).collect()
+def _frame(spark, samples):
+    return spark.createDataFrame([(s,) for s in samples], ["raw"])
+
+
+def _tokens(spark, samples):
+    """The samples' cleaned tokens, as column `toks`."""
+    return _frame(spark, samples).select(X.clean_tokens("raw").alias("toks"))
 
 
 @settings(max_examples=15, deadline=None)
 @given(texts)
 def test_clean_text_is_idempotent_and_lowercase_alpha(spark, samples):
-    rows = _pipe(
-        spark,
-        samples,
-        X.clean_text(F.col("raw")).alias("once"),
-        X.clean_text(X.clean_text(F.col("raw"))).alias("twice"),
-    )
+    once = _frame(spark, samples).select(X.clean_text("raw").alias("once"))
+    rows = once.select("once", X.clean_text("once").alias("twice")).collect()
     for r in rows:
         assert r.once == r.twice  # applying the cleaner again changes nothing
         assert all(c.isalpha() or c == " " for c in r.once)
@@ -43,7 +41,8 @@ def test_clean_text_is_idempotent_and_lowercase_alpha(spark, samples):
 @settings(max_examples=15, deadline=None)
 @given(texts)
 def test_tokenize_has_no_empty_or_space_tokens(spark, samples):
-    rows = _pipe(spark, samples, X.tokenize(X.clean_text(F.col("raw"))).alias("toks"))
+    cleaned = _frame(spark, samples).select(X.clean_text("raw").alias("c"))
+    rows = cleaned.select(X.tokenize("c").alias("toks")).collect()
     for r in rows:
         assert all(t and " " not in t for t in r.toks)
 
@@ -51,13 +50,7 @@ def test_tokenize_has_no_empty_or_space_tokens(spark, samples):
 @settings(max_examples=15, deadline=None)
 @given(texts)
 def test_stopword_filter_is_subset_and_stopword_free(spark, samples):
-    toks = X.tokenize(X.clean_text(F.col("raw")))
-    rows = _pipe(
-        spark,
-        samples,
-        toks.alias("toks"),
-        X.remove_stopwords(toks).alias("kept"),
-    )
+    rows = _tokens(spark, samples).select("toks", X.remove_stopwords("toks").alias("kept")).collect()
     sw = set(STOPWORDS)
     for r in rows:
         assert set(r.kept) <= set(r.toks)
@@ -69,8 +62,7 @@ def test_stopword_filter_is_subset_and_stopword_free(spark, samples):
 @settings(max_examples=15, deadline=None)
 @given(texts)
 def test_distinct_tokens_is_set_and_order_preserving(spark, samples):
-    toks = X.tokenize(X.clean_text(F.col("raw")))
-    rows = _pipe(spark, samples, toks.alias("toks"), X.distinct_tokens(toks).alias("d"))
+    rows = _tokens(spark, samples).select("toks", X.distinct_tokens("toks").alias("d")).collect()
     for r in rows:
         assert len(r.d) == len(set(r.d))
         assert set(r.d) == set(r.toks)
