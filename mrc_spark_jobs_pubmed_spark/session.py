@@ -11,11 +11,63 @@ timestamp semantics match the DuckDB correctness oracle.
 
 from __future__ import annotations
 
+import glob
+import hashlib
 import os
+import shutil
+import subprocess
+import tempfile
+import zipfile
 
+import pyspark
 from pyspark.sql import SparkSession
 
-DEFAULT_SHUFFLE_PARTITIONS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+_JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
+_NIO_FS_SOURCE = os.path.join(_JVM_DIR, "NioLocalFs.java")
+_BUILD_DIR = os.path.join(_JVM_DIR, ".build")
+_NIO_FS_CLASS = "mrc_spark_jobs_pubmed_spark.jvm.NioLocalFs"
+
+
+def _default_driver_mem() -> str:
+    """16g, or half of physical RAM on a smaller host."""
+    phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20
+    return f"{min(16 * 1024, phys_mb // 2)}m"
+
+
+def nio_fs_jar() -> str:
+    """The compiled NioLocalFs jar, built on first use.
+
+    Cached under ``jvm/.build/`` by the source's sha256 and published with
+    an atomic rename, so concurrent sessions never see a partial jar.
+    """
+    with open(_NIO_FS_SOURCE, "rb") as f:
+        digest = hashlib.sha256(f.read()).hexdigest()[:16]
+    jar = os.path.join(_BUILD_DIR, f"nio-local-fs-{digest}.jar")
+    if os.path.exists(jar):
+        return jar
+    os.makedirs(_BUILD_DIR, exist_ok=True)
+    javac = shutil.which("javac")
+    if javac is None:
+        raise RuntimeError(
+            f"local Spark sessions compile {_NIO_FS_SOURCE} and need a JDK: no javac on PATH")
+    (hadoop_api,) = glob.glob(os.path.join(
+        os.path.dirname(pyspark.__file__), "jars", "hadoop-client-api-*.jar"))
+    with tempfile.TemporaryDirectory(dir=_BUILD_DIR) as tmp:
+        classes = os.path.join(tmp, "classes")
+        done = subprocess.run(
+            [javac, "--release", "17", "-cp", hadoop_api, "-d", classes, _NIO_FS_SOURCE],
+            capture_output=True, text=True,
+        )
+        if done.returncode != 0:
+            raise RuntimeError(f"javac failed on {_NIO_FS_SOURCE}:\n{done.stderr}")
+        staged = os.path.join(tmp, "nio-local-fs.jar")
+        with zipfile.ZipFile(staged, "w") as z:
+            for root, _, files in os.walk(classes):
+                for name in files:
+                    path = os.path.join(root, name)
+                    z.write(path, os.path.relpath(path, classes))
+        os.replace(staged, jar)
+    return jar
 
 
 def get_session(
@@ -31,13 +83,18 @@ def get_session(
     N = SPARK_GRAFT_CPUS. Shuffle partitions default to the core count —
     AQE coalesces down when partitions are small and splits skewed ones,
     so this is an upper bound, not a hand-tuned constant.
+
+    A local master's ``file:`` filesystem is ``jvm/NioLocalFs.java``
+    (compiled with javac on first use): Hadoop's local filesystem minus
+    the ``chmod``/``readlink`` child processes it starts per file when,
+    as here, its native library is absent. Other masters keep Hadoop's.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # local[N] runs all N executor threads in the driver JVM; Spark's 1g
     # default heap OOMs around sf1 (6M-row lineitem + 32 concurrent
     # hash-agg partitions). Must be set before the JVM launches, hence
     # here and not per-query. On a real cluster spark-submit overrides.
-    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM", "16g")
+    driver_mem = os.environ.get("SPARK_GRAFT_DRIVER_MEM") or _default_driver_mem()
     builder = (
         SparkSession.builder.appName(app_name)
         .config("spark.driver.memory", driver_mem)
@@ -50,7 +107,7 @@ def get_session(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config(
             "spark.sql.shuffle.partitions",
-            str(shuffle_partitions or DEFAULT_SHUFFLE_PARTITIONS),
+            str(shuffle_partitions or cpus),
         )
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
@@ -104,10 +161,18 @@ def get_session(
         # file volume alone saturates the cluster and a floor is moot.
         .config("spark.ui.enabled", "false")
     )
+    if master is None and not os.environ.get("SPARK_MASTER"):
+        master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    elif not os.environ.get("SPARK_MASTER"):
-        builder = builder.master(f"local[{cpus}]")
+    if master == "local" or (master or "").startswith("local["):
+        # executors are threads of the driver JVM, so the driver's class
+        # path reaches every task
+        builder = (
+            builder.config("spark.driver.extraClassPath", nio_fs_jar())
+            .config("spark.hadoop.fs.file.impl", _NIO_FS_CLASS)
+            .config("spark.hadoop.fs.AbstractFileSystem.file.impl", _NIO_FS_CLASS + "$Fs")
+        )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
