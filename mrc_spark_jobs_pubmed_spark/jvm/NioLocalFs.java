@@ -9,6 +9,7 @@ import java.nio.file.attribute.PosixFilePermissions;
 import org.apache.hadoop.conf.Configuration;
 import org.apache.hadoop.fs.ChecksumFs;
 import org.apache.hadoop.fs.DelegateToFileSystem;
+import org.apache.hadoop.fs.FSDataInputStream;
 import org.apache.hadoop.fs.FileStatus;
 import org.apache.hadoop.fs.FsServerDefaults;
 import org.apache.hadoop.fs.LocalFileSystem;
@@ -24,7 +25,7 @@ import org.apache.hadoop.fs.permission.FsPermission;
  * creates and {@code readlink} for every link-status check (FileContext
  * renames, so every checkpoint commit). The checksummed wrappers are
  * Hadoop's own, so {@code .crc} side files are written and verified as
- * before.
+ * before; {@link Fs} also verifies them on the one-argument open.
  *
  * <p>{@code fs.file.impl} names this class;
  * {@code fs.AbstractFileSystem.file.impl} names {@link Fs}.
@@ -90,6 +91,14 @@ public class NioLocalFs extends LocalFileSystem {
   public static class Fs extends ChecksumFs {
     public Fs(URI uri, Configuration conf) throws IOException, URISyntaxException {
       super(new RawFs(uri, conf));
+    }
+
+    /** Verified like {@code open(f, bufferSize)}: the inherited
+     *  {@code FilterFs.open(Path)} reads the raw file unchecked, and
+     *  Spark's checkpoint manager opens offset and commit logs with it. */
+    @Override
+    public FSDataInputStream open(Path f) throws IOException {
+      return open(f, getServerDefaults(f).getFileBufferSize());
     }
   }
 }

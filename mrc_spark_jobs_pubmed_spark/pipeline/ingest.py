@@ -148,8 +148,8 @@ def http_fetcher(url: str, post: Callable = _default_post) -> str:
     """requests-backed `fetcher` seam: efetch page → body text.
 
     Returns the body verbatim — transient-failure classification
-    (RETRY_MARKERS) and the bounded retry loop live in `fetch_pages`, so
-    the mock and HTTP backends share one retry policy.
+    (RETRY_MARKERS) and the bounded retry loop live in `fetch_with_retry`,
+    so the mock and HTTP backends share one retry policy.
     """
     return post(url).text
 
@@ -209,6 +209,26 @@ def expand_pages(work: DataFrame, page_size: int = PAGE_SIZE) -> DataFrame:
     )
 
 
+def fetch_with_retry(
+    fetcher: Callable[[str], str],
+    url: str,
+    max_retries: int,
+    backoff_s: float = 0.0,
+) -> tuple[str | None, int]:
+    """(body, attempts): fetch `url` until a body carries none of the
+    RETRY_MARKERS, at most `max_retries` times, sleeping `backoff_s` after
+    each marked body. The body is None when every attempt was marked."""
+    attempts = 0
+    while attempts < max_retries:
+        attempts += 1
+        got = fetcher(url)
+        if not any(m in got for m in RETRY_MARKERS):
+            return got, attempts
+        if backoff_s:
+            time.sleep(backoff_s)
+    return None, attempts
+
+
 def fetch_pages(
     pages: DataFrame,
     fetcher: Callable[[str], str] = mock_fetcher,
@@ -230,15 +250,9 @@ def fetch_pages(
         for pdf in batches:
             out = []
             for row in pdf.itertuples(index=False):
-                payload, attempts = None, 0
-                while attempts < max_retries:
-                    attempts += 1
-                    got = fetcher(row.page_url)
-                    if not any(m in got for m in RETRY_MARKERS):
-                        payload = got
-                        break
-                    if backoff_s:
-                        time.sleep(backoff_s)
+                payload, attempts = fetch_with_retry(
+                    fetcher, row.page_url, max_retries, backoff_s
+                )
                 out.append(
                     (row.page_key, row.year, row.month, row.offset, payload, attempts)
                 )

@@ -31,16 +31,12 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
+from mrc_spark_jobs_pubmed_spark.session import hadoop_path
+
 # The directory inside an idempotent sink that lists the keys that were
 # produced but yielded no row. Spark, pyarrow and `part-*` globs skip
 # `_`-prefixed names, so readers of the sink never see it.
 LEDGER = "_keys_without_rows"
-
-
-def _hadoop_path(spark: SparkSession, path: str):
-    """(FileSystem, Path) for `path`, on the filesystem its scheme names."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
 
 
 def write_partitioned(
@@ -73,7 +69,7 @@ def existing_keys(spark: SparkSession, path: str, key: T.StructField) -> DataFra
     that reads the keys: a damaged sink read as empty would re-fetch every
     page and append duplicates.
     """
-    fs, jpath = _hadoop_path(spark, path)
+    fs, jpath = hadoop_path(spark, path)
     if not fs.exists(jpath):
         return None
     schema = T.StructType([key])
@@ -167,7 +163,7 @@ def derived_write(
     `schema`, so no inference job runs.
     """
     files = "\n".join(sorted(source.inputFiles()))
-    fs, jpath = _hadoop_path(spark, path)
+    fs, jpath = hadoop_path(spark, path)
     marker = spark._jvm.org.apache.hadoop.fs.Path(
         jpath, "_from-" + hashlib.sha256(files.encode()).hexdigest()
     )

@@ -234,7 +234,9 @@ LEFT JOIN (SELECT * FROM events WHERE event_type = 'view') v
     "variant's replay test drives the same join body as two streams.",
 )
 def stream_interval_left_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return J.click_view_interval_left_join(load_table(spark, "events", sf_dir))
+    return J.click_view_interval_join(
+        load_table(spark, "events", sf_dir), "left_outer"
+    )
 
 
 @register(

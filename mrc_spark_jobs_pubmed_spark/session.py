@@ -28,6 +28,12 @@ _BUILD_DIR = os.path.join(_JVM_DIR, ".build")
 _NIO_FS_CLASS = "mrc_spark_jobs_pubmed_spark.jvm.NioLocalFs"
 
 
+def hadoop_path(spark: SparkSession, path: str):
+    """(FileSystem, Path) for `path`, on the filesystem its scheme names."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
+
+
 def _default_driver_mem() -> str:
     """16g, or half of physical RAM on a smaller host."""
     phys_mb = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") // 2**20

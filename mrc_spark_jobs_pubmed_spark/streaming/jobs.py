@@ -19,6 +19,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from mrc_spark_jobs_pubmed_spark.session import hadoop_path
 from mrc_spark_jobs_pubmed_spark.sources.catalog import events_read_plan
 
 
@@ -36,13 +37,8 @@ from mrc_spark_jobs_pubmed_spark.sources.catalog import events_read_plan
 # errors propagate: only an absent version means "first batch".
 
 
-def _fs(spark: SparkSession, path: str):
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
-    return jpath.getFileSystem(spark._jsc.hadoopConfiguration()), jpath
-
-
 def _state_versions(spark: SparkSession, state_dir: str) -> list[int]:
-    fs, root = _fs(spark, state_dir)
+    fs, root = hadoop_path(spark, state_dir)
     if not fs.exists(root):
         return []
     Path = spark._jvm.org.apache.hadoop.fs.Path
@@ -73,7 +69,7 @@ def write_state(df: DataFrame, state_dir: str, batch_id: int) -> None:
     _SUCCESS exists."""
     df.write.mode("overwrite").parquet(f"{state_dir}/v{batch_id}")
     spark = df.sparkSession
-    fs, root = _fs(spark, state_dir)
+    fs, root = hadoop_path(spark, state_dir)
     for v in _state_versions(spark, state_dir):
         if v != batch_id:
             fs.delete(spark._jvm.org.apache.hadoop.fs.Path(root, f"v{v}"), True)
@@ -483,14 +479,18 @@ def run_to_files(stream_df: DataFrame, path: str, checkpoint: str):
     )
 
 
-def click_view_interval_join(events: DataFrame) -> DataFrame:
+def click_view_interval_join(events: DataFrame, how: str = "inner") -> DataFrame:
     """Stream-stream interval join: each click joined to same-user views
-    within the preceding 10 minutes.
+    within the preceding 10 minutes; with `how="left_outer"`, every click,
+    NULL-extended when no such view arrived.
 
     Both sides carry watermarks and the join condition bounds event time
     on both ends, so state is provably finite — Spark evicts outlived
-    rows instead of buffering streams forever. Works identically on a
-    batch DataFrame (the oracle-able form) and two streaming readers.
+    rows instead of buffering streams forever. An outer join needs both:
+    a left row can only be emitted as unmatched once the watermark proves
+    no matching right row can still arrive, so the NULL-extension itself
+    is watermark-gated state eviction. Works identically on a batch
+    DataFrame (the oracle-able form) and two streaming readers.
     """
     views = (
         events.filter(F.col("event_type") == "view")
@@ -515,44 +515,7 @@ def click_view_interval_join(events: DataFrame) -> DataFrame:
         (F.col("c_user") == F.col("v_user"))
         & (F.col("view_ts") <= F.col("click_ts"))
         & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 10 MINUTES")),
-    ).select("click_id", "view_id", "c_user", "click_ts", "view_ts")
-
-
-def click_view_interval_left_join(events: DataFrame) -> DataFrame:
-    """Stream-stream LEFT OUTER interval join: every click, with its
-    matching same-user views in the preceding 10 minutes — or NULLs if
-    none arrived.
-
-    Outer stream-stream joins need watermarks on BOTH sides plus the
-    two-sided time bound: a left row can only be emitted as unmatched
-    once the watermark proves no matching right row can still arrive,
-    so the NULL-extension itself is watermark-gated state eviction.
-    Same body runs in batch (the oracle-able form) and as two streams.
-    """
-    views = (
-        events.filter(F.col("event_type") == "view")
-        .withWatermark("ts", WATERMARK)
-        .select(
-            F.col("user_id").alias("v_user"),
-            F.col("ts").alias("view_ts"),
-            F.col("event_id").alias("view_id"),
-        )
-    )
-    clicks = (
-        events.filter(F.col("event_type") == "click")
-        .withWatermark("ts", WATERMARK)
-        .select(
-            F.col("user_id").alias("c_user"),
-            F.col("ts").alias("click_ts"),
-            F.col("event_id").alias("click_id"),
-        )
-    )
-    return clicks.join(
-        views,
-        (F.col("c_user") == F.col("v_user"))
-        & (F.col("view_ts") <= F.col("click_ts"))
-        & (F.col("view_ts") >= F.col("click_ts") - F.expr("INTERVAL 10 MINUTES")),
-        "left_outer",
+        how,
     ).select("click_id", "view_id", "c_user", "click_ts", "view_ts")
 
 
@@ -727,6 +690,46 @@ def run_cdc_apply_to_files(
     )
 
 
+# --- per-key fold: the NoTimeout arbitrary-state twins -----------------------
+
+
+def _fold_per_key(
+    src: DataFrame,
+    keys: list[str],
+    out_schema,
+    state_schema,
+    fold: Callable,
+) -> DataFrame:
+    """`src` grouped by `keys` through applyInPandasWithState (update
+    mode, NoTimeout), each key's micro-batch handed to `fold`.
+
+    `fold(key, rows, carry)` gets the key tuple, the key's batch rows as
+    one non-empty pandas frame, and the stored state tuple, or None for a
+    key not seen before. It returns (output row tuples in `out_schema`
+    column order, new state tuple), or None to leave the state alone and
+    emit nothing.
+    """
+    import pandas as pd
+
+    columns = out_schema.fieldNames()
+
+    def update(key, pdfs, state):
+        rows = pd.concat(list(pdfs), ignore_index=True)
+        if not len(rows):
+            return
+        folded = fold(key, rows, state.get if state.exists else None)
+        if folded is None:
+            return
+        out, carry = folded
+        state.update(carry)
+        if out:
+            yield pd.DataFrame(out, columns=columns)
+
+    return src.groupBy(*keys).applyInPandasWithState(
+        update, out_schema, state_schema, "update", "NoTimeout"
+    )
+
+
 # --- streaming heartbeat-gap detection --------------------------------------
 
 HB_GAP_S = 3600  # report silences longer than an hour
@@ -749,7 +752,6 @@ def stateful_heartbeat_gaps(events: DataFrame) -> DataFrame:
     (update mode): a gap is closed by the event that ends it, in the
     batch where that event arrives.
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -762,13 +764,10 @@ def stateful_heartbeat_gaps(events: DataFrame) -> DataFrame:
     )
     state_schema = T.StructType([T.StructField("last_us", T.LongType())])
 
-    def update(key, pdfs, state):
-        uid = key[0]
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
+    def fold(key, rows, carry):
+        (uid,) = key
         ts_us = sorted((rows["ts"].astype("int64") // 1000).tolist())
-        prior = state.get[0] if state.exists else None
+        prior = None if carry is None else carry[0]
         # ENFORCED closed-gap contract (r4 ADVICE): events at or before
         # the carried high-water mark fall inside intervals whose gap
         # verdict was already emitted as final — folding them again
@@ -779,24 +778,17 @@ def stateful_heartbeat_gaps(events: DataFrame) -> DataFrame:
         if prior is not None:
             ts_us = [t for t in ts_us if t > prior]
             if not ts_us:
-                return
+                return None
         seq = ([prior] if prior is not None else []) + ts_us
         gaps = [
             (uid, a, b, (b - a) // 1_000_000)
             for a, b in zip(seq, seq[1:])
             if b - a > _HB_GAP_US
         ]
-        state.update((int(seq[-1]),))
-        if gaps:
-            yield pd.DataFrame(
-                gaps,
-                columns=["user_id", "gap_start_us", "gap_end_us", "gap_s"],
-            )
+        return gaps, (int(seq[-1]),)
 
     src = events.withWatermark("ts", WATERMARK)
-    return src.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", "NoTimeout"
-    )
+    return _fold_per_key(src, ["user_id"], out_schema, state_schema, fold)
 
 
 # --- streaming exact-distinct maintenance (bitmap OR-merge) -----------------
@@ -893,7 +885,6 @@ def stateful_ewma(events: DataFrame) -> DataFrame:
     Python ints (a pandas int64 fold silently wraps — the round-4
     grouped-UDF lesson).
     """
-    import pandas as pd
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -911,17 +902,14 @@ def stateful_ewma(events: DataFrame) -> DataFrame:
         ]
     )
 
-    def update(key, pdfs, state):
-        uid = key[0]
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
+    def fold(key, rows, carry):
+        (uid,) = key
         rows = rows.sort_values(["t_us", "event_id"])
         new_vals = [int(v) for v in rows["v_u4"].tolist()]
-        if state.exists:
-            n, vals = int(state.get[0]), [int(v) for v in state.get[1]]
-        else:
+        if carry is None:
             n, vals = 0, []
+        else:
+            n, vals = int(carry[0]), [int(v) for v in carry[1]]
         n += len(new_vals)
         vals = (vals + new_vals)[-EWMA_K:]
         # batch form: sum_lag v_lag * 2^(K-1-lag) / sum_lag 2^(K-1-lag);
@@ -934,11 +922,7 @@ def stateful_ewma(events: DataFrame) -> DataFrame:
         # truncate toward zero, matching Spark's `div` in the batch twin
         q = abs(num) // den
         ewma = q if num >= 0 else -q
-        state.update((n, vals))
-        yield pd.DataFrame(
-            [(uid, n, vals[-1], ewma)],
-            columns=["user_id", "n_events", "last_v_u4", "ewma_u4"],
-        )
+        return [(uid, n, vals[-1], ewma)], (n, vals)
 
     # no watermark: NoTimeout closed-fold semantics, as heartbeat_gaps
     src = events.select(
@@ -947,9 +931,7 @@ def stateful_ewma(events: DataFrame) -> DataFrame:
         "event_id",
         F.round(F.col("value") * 10000).cast("long").alias("v_u4"),
     )
-    return src.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", "NoTimeout"
-    )
+    return _fold_per_key(src, ["user_id"], out_schema, state_schema, fold)
 
 
 ROLL_DAYS = 7  # trailing window width, days
@@ -1033,7 +1015,6 @@ def stateful_double_fire(
     final; update mode cannot retract), so a full in-order replay
     equals the batch query exactly. State is key-domain bounded
     (24 bytes per ever-seen (user, type))."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     gap_us = gap_s * 1_000_000
@@ -1055,11 +1036,8 @@ def stateful_double_fire(
         ]
     )
 
-    def update(key, pdfs, state):
+    def fold(key, rows, carry):
         uid, etype = key
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
         evs = sorted(
             (
                 int(t) // 1000,
@@ -1072,18 +1050,11 @@ def stateful_double_fire(
                 (rows["value"] * 10000).round().astype("int64"),
             )
         )
-        if state.exists:
-            last_us, last_event, last_v4 = (
-                int(state.get[0]),
-                int(state.get[1]),
-                int(state.get[2]),
-            )
-            evs = [e for e in evs if e[0] > last_us]
+        prev = None if carry is None else tuple(int(c) for c in carry)
+        if prev is not None:
+            evs = [e for e in evs if e[0] > prev[0]]
             if not evs:
-                return
-            prev = (last_us, last_event, last_v4)
-        else:
-            prev = None
+                return None
         out = []
         for t_us, eid, v4 in evs:
             if prev is not None and t_us - prev[0] <= gap_us:
@@ -1098,23 +1069,11 @@ def stateful_double_fire(
                     )
                 )
             prev = (t_us, eid, v4)
-        state.update((prev[0], prev[1], prev[2]))
-        if out:
-            yield pd.DataFrame(
-                out,
-                columns=[
-                    "user_id",
-                    "event_type",
-                    "first_event",
-                    "dup_event",
-                    "gap_ms",
-                    "same_value",
-                ],
-            )
+        return out, prev
 
     src = events.withWatermark("ts", WATERMARK)
-    return src.groupBy("user_id", "event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", "NoTimeout"
+    return _fold_per_key(
+        src, ["user_id", "event_type"], out_schema, state_schema, fold
     )
 
 
@@ -1147,7 +1106,6 @@ def stateful_rate_limit(
     before the carried max timestamp are dropped (decisions are final;
     update mode cannot retract), so an in-order replay equals the
     batch window bit-for-bit."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     w_us = window_s * 1_000_000
@@ -1168,27 +1126,21 @@ def stateful_rate_limit(
         ]
     )
 
-    def update(key, pdfs, state):
+    def fold(key, rows, carry):
         (uid,) = key
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
         evs = sorted(
             (int(t) // 1000, int(e), str(ty))
             for t, e, ty in zip(
                 rows["ts"].astype("int64"), rows["event_id"], rows["event_type"]
             )
         )
-        if state.exists:
-            ts_arr = list(state.get[0])
-            n_arr = list(state.get[1])
-            last_us = ts_arr[-1]
-            evs = [e for e in evs if e[0] > last_us]
-            if not evs:
-                return
+        if carry is None:
+            ts_arr, n_arr = [], []
         else:
-            ts_arr = []
-            n_arr = []
+            ts_arr, n_arr = list(carry[0]), list(carry[1])
+            evs = [e for e in evs if e[0] > ts_arr[-1]]
+            if not evs:
+                return None
         out = []
         # two-pointer sliding window: arrivals are time-ordered, so the
         # window's left edge only ever advances — a running total plus
@@ -1219,23 +1171,10 @@ def stateful_rate_limit(
                     (uid, eid, ty, t_us, win_n, 1 if win_n > k else 0)
                 )
             i = j
-        state.update((ts_arr[left:], n_arr[left:]))
-        yield pd.DataFrame(
-            out,
-            columns=[
-                "user_id",
-                "event_id",
-                "event_type",
-                "t_us",
-                "win_n",
-                "throttled",
-            ],
-        )
+        return out, (ts_arr[left:], n_arr[left:])
 
     src = events.withWatermark("ts", WATERMARK)
-    return src.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", "NoTimeout"
-    )
+    return _fold_per_key(src, ["user_id"], out_schema, state_schema, fold)
 
 
 # --- streaming burst detection (arbitrary state) -------------------------------
@@ -1282,22 +1221,18 @@ def stateful_burst_detection(
         ]
     )
 
-    def update(key, pdfs, state):
+    def fold(key, rows, carry):
         (etype,) = key
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
         t_us = sorted(int(t) // 1000 for t in rows["ts"].astype("int64"))
-        if state.exists:
-            arr = list(zip(state.get[0], state.get[1]))
-            last_h = arr[-1][0]
+        if carry is None:
+            arr = []
+        else:
+            arr = list(zip(carry[0], carry[1]))
             # drop pre-carry events: hours before the open hour are
             # closed and already decided (replay contract)
-            t_us = [t for t in t_us if t // _HOUR_US >= last_h]
+            t_us = [t for t in t_us if t // _HOUR_US >= arr[-1][0]]
             if not t_us:
-                return
-        else:
-            arr = []
+                return None
         out = []
         for h, n_new in pd.Series(
             [t // _HOUR_US for t in t_us]
@@ -1317,21 +1252,35 @@ def stateful_burst_detection(
                     out.append((etype, ch, cn, base))
             arr.append((h, n_new))
             arr = [(hh, n) for hh, n in arr if hh >= h - base_h]
-        state.update(([h for h, _ in arr], [n for _, n in arr]))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["event_type", "hour", "n", "base_n"]
-            )
+        return out, ([h for h, _ in arr], [n for _, n in arr])
 
     src = events.withWatermark("ts", WATERMARK)
-    return src.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", "NoTimeout"
-    )
+    return _fold_per_key(src, ["event_type"], out_schema, state_schema, fold)
 
 
 # --- streaming queueing delay (arbitrary state, O(1) per key) -------------------
 
 Q_SVC_PER_U4 = 100  # service microseconds per 1e-4 value unit
+
+
+def _served_events(rows, svc_per_u4: int, carry) -> list[tuple[int, int, int]]:
+    """A batch's (a_us, event_id, s_us) service events in replay order,
+    without those at or behind the (a_us, event_id) cursor that `carry`
+    holds as its third field."""
+    evs = sorted(
+        (
+            int(t) // 1000,
+            int(e),
+            int(round(float(v) * 10000)) * svc_per_u4,
+        )
+        for t, e, v in zip(
+            rows["ts"].astype("int64"), rows["event_id"], rows["value"]
+        )
+    )
+    if carry is None:
+        return evs
+    lk = carry[2]
+    return [e for e in evs if (e[0], e[1]) > (lk[0], lk[1])]
 
 
 def stateful_queue_wait(
@@ -1347,7 +1296,6 @@ def stateful_queue_wait(
     window on any in-order replay. Events at or before the carried
     arrival are dropped (decisions are final; update mode cannot
     retract)."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -1366,30 +1314,15 @@ def stateful_queue_wait(
         ]
     )
 
-    def update(key, pdfs, state):
+    def fold(key, rows, carry):
         (etype,) = key
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
-        evs = sorted(
-            (
-                int(t) // 1000,
-                int(e),
-                int(round(float(v) * 10000)) * svc_per_u4,
-            )
-            for t, e, v in zip(
-                rows["ts"].astype("int64"), rows["event_id"], rows["value"]
-            )
-        )
-        if state.exists:
-            pre_sum, min_d = int(state.get[0]), int(state.get[1])
-            lk = list(state.get[2])
-            evs = [e for e in evs if (e[0], e[1]) > (lk[0], lk[1])]
-            if not evs:
-                return
-            has_min = True
-        else:
+        evs = _served_events(rows, svc_per_u4, carry)
+        if not evs:
+            return None
+        if carry is None:
             pre_sum, min_d, has_min = 0, 0, False
+        else:
+            pre_sum, min_d, has_min = int(carry[0]), int(carry[1]), True
         out = []
         for a_us, eid, s_us in evs:
             d = pre_sum - a_us
@@ -1401,15 +1334,10 @@ def stateful_queue_wait(
                 min_d = min(min_d, d)
             pre_sum += s_us
             out.append((etype, eid, a_us, w))
-        state.update((pre_sum, min_d, [evs[-1][0], evs[-1][1]]))
-        yield pd.DataFrame(
-            out, columns=["event_type", "event_id", "a_us", "w_us"]
-        )
+        return out, (pre_sum, min_d, [evs[-1][0], evs[-1][1]])
 
     src = events.withWatermark("ts", WATERMARK)
-    return src.groupBy("event_type").applyInPandasWithState(
-        update, out_schema, state_schema, "update", "NoTimeout"
-    )
+    return _fold_per_key(src, ["event_type"], out_schema, state_schema, fold)
 
 
 def stateful_interval_coalesce(
@@ -1435,7 +1363,6 @@ def stateful_interval_coalesce(
     islands are immutable, so feeds that can reorder across batches
     must sort upstream (the replay tests do). test_streaming asserts
     the contract explicitly."""
-    import pandas as pd
     from pyspark.sql import types as T
 
     out_schema = T.StructType(
@@ -1454,31 +1381,16 @@ def stateful_interval_coalesce(
         ]
     )
 
-    def update(key, pdfs, state):
+    def fold(key, rows, carry):
         (user,) = key
-        rows = pd.concat(list(pdfs), ignore_index=True)
-        if not len(rows):
-            return
-        evs = sorted(
-            (
-                int(t) // 1000,
-                int(e),
-                int(round(float(v) * 10000)) * svc_per_u4,
-            )
-            for t, e, v in zip(
-                rows["ts"].astype("int64"), rows["event_id"], rows["value"]
-            )
-        )
-        if state.exists:
-            o_start, o_end = int(state.get[0]), int(state.get[1])
-            lk = list(state.get[2])
-            evs = [e for e in evs if (e[0], e[1]) > (lk[0], lk[1])]
-            if not evs:
-                return
-            has_open = True
-        else:
+        evs = _served_events(rows, svc_per_u4, carry)
+        if not evs:
+            return None
+        if carry is None:
             o_start = o_end = 0
             has_open = False
+        else:
+            o_start, o_end, has_open = int(carry[0]), int(carry[1]), True
         out = []
         for a_us, eid, s_us in evs:
             e_us = a_us + s_us
@@ -1489,13 +1401,7 @@ def stateful_interval_coalesce(
             else:
                 out.append((user, o_start, o_end, o_end - o_start))
                 o_start, o_end = a_us, e_us
-        state.update((o_start, o_end, [evs[-1][0], evs[-1][1]]))
-        if out:
-            yield pd.DataFrame(
-                out, columns=["user_id", "start_us", "end_us", "covered_us"]
-            )
+        return out, (o_start, o_end, [evs[-1][0], evs[-1][1]])
 
     src = events.withWatermark("ts", WATERMARK)
-    return src.groupBy("user_id").applyInPandasWithState(
-        update, out_schema, state_schema, "update", "NoTimeout"
-    )
+    return _fold_per_key(src, ["user_id"], out_schema, state_schema, fold)

@@ -7,6 +7,7 @@ java.nio. Writes, checkpoints and sinks must start no process, and modes,
 from __future__ import annotations
 
 import os
+import re
 import stat
 import subprocess
 import sys
@@ -15,6 +16,7 @@ import zipfile
 
 import pytest
 from py4j.protocol import Py4JJavaError
+from pyspark.errors import StreamingQueryException
 
 from mrc_spark_jobs_pubmed_spark import session as S
 from mrc_spark_jobs_pubmed_spark.streaming import jobs as J
@@ -193,11 +195,37 @@ def test_flipped_byte_fails_the_checksum(spark, tmp_path):
     _flip_byte(offset)
     fc = jvm.org.apache.hadoop.fs.FileContext.getFileContext(conf)
     assert fc.getDefaultFileSystem().getClass().getName() == S._NIO_FS_CLASS + "$Fs"
-    # With a buffer size: Hadoop 3.4's one-argument FileContext.open goes
-    # through FilterFs straight to the raw filesystem and verifies nothing,
-    # for its own LocalFs as for this one.
     offset_path = jvm.org.apache.hadoop.fs.Path(str(offset))
     _raises_checksum(spark, lambda: _read_all(spark, fc.open(offset_path, 4096)))
+    # Hadoop 3.4's one-argument FileContext.open goes through FilterFs
+    # straight to the raw filesystem; NioLocalFs$Fs verifies it too
+    _raises_checksum(spark, lambda: _read_all(spark, fc.open(offset_path)))
+
+
+def test_restart_refuses_a_corrupt_checkpoint_offset(spark, tmp_path):
+    """A restarted availableNow sink reads its offset log through the
+    one-argument FileContext.open. A digit changed in `offsets/0` leaves
+    valid JSON, so only the `.crc` check can refuse it."""
+    src_dir, out, ckpt = tmp_path / "src", str(tmp_path / "out"), str(tmp_path / "ckpt")
+    spark.range(10).write.parquet(str(src_dir / "a"))
+
+    def start():
+        src = (spark.readStream.schema("id long")
+               .option("recursiveFileLookup", "true").parquet(str(src_dir)))
+        return J.run_to_files(src, out, ckpt)
+
+    start().awaitTermination()
+    assert spark.read.parquet(out).count() == 10
+    offset = tmp_path / "ckpt" / "offsets" / "0"
+    text = offset.read_text()
+    changed = re.sub(r'("batchTimestampMs":\d*)(\d)',
+                     lambda m: m[1] + str((int(m[2]) + 1) % 10), text, count=1)
+    assert changed != text
+    offset.write_text(changed)
+    spark.range(10, 30).write.parquet(str(src_dir / "b"))
+    with pytest.raises(StreamingQueryException, match=r"Checksum error: \S*/ckpt/offsets/0 "):
+        start().awaitTermination()
+    assert spark.read.parquet(out).count() == 10
 
 
 def test_link_status_matches_hadoop(spark, tmp_path):

@@ -4,6 +4,10 @@ forms when the whole fixture is replayed through micro-batches."""
 
 from __future__ import annotations
 
+import datetime
+import os
+import time
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -22,6 +26,68 @@ def _batch_events(spark):
 def _drain(q):
     q.processAllAvailable()
     q.stop()
+
+
+_T0 = datetime.datetime(2024, 1, 1, 12, tzinfo=datetime.timezone.utc)
+
+
+def _events(spark, rows):
+    """Events of user 7, type view, from (event_id, seconds after _T0,
+    value) rows."""
+    return spark.createDataFrame(
+        [
+            (eid, _T0 + datetime.timedelta(seconds=dt), 7, "view", val, "{}")
+            for eid, dt, val in rows
+        ],
+        "event_id long, ts timestamp, user_id long,"
+        " event_type string, value double, props string",
+    )
+
+
+def _tertiles(ev):
+    """The events split into three time ranges, in time order."""
+    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
+    cuts = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
+    return [
+        ev.where(
+            (F.col("ts") >= F.lit(cuts[i]))
+            & (
+                F.col("ts") <= F.lit(cuts[i + 1])
+                if i == 2
+                else F.col("ts") < F.lit(cuts[i + 1])
+            )
+        )
+        for i in range(3)
+    ]
+
+
+def _replay(spark, tmp_path, name, job, frames):
+    """Replay `frames` through `job`, one single-file micro-batch each and
+    in list order, into the update-mode memory sink `name`.
+
+    The file source takes files in mtime order, so each file gets an mtime
+    one second after the previous one's."""
+    src = tmp_path / f"{name}_src"
+    now = time.time()
+    for i, df in enumerate(frames):
+        df.coalesce(1).write.parquet(str(src / f"t{i}"))
+        for f in (src / f"t{i}").iterdir():
+            os.utime(f, (now - len(frames) + i,) * 2)
+    stream = (
+        spark.readStream.schema(frames[0].schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("recursiveFileLookup", "true")
+        .parquet(str(src))
+    )
+    q = (
+        job(stream)
+        .writeStream.format("memory")
+        .queryName(name)
+        .outputMode("update")
+        .option("checkpointLocation", str(tmp_path / f"{name}_ckpt"))
+        .start()
+    )
+    _drain(q)
 
 
 def test_tumbling_stream_equals_batch(spark):
@@ -355,40 +421,10 @@ def test_heartbeat_gaps_stream_equals_batch(spark, tmp_path):
         rel_heartbeat_gaps,
     )
 
-    import os
-    import time
-
-    src = str(tmp_path / "hb_src")
-    os.makedirs(src)
+    # the three time-tertiles replay as time-ordered micro-batches — a
+    # heartbeat monitor's arrival order
     ev = _batch_events(spark)
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cuts = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    # write the three time-tertiles as separate single files, in order
-    # (ascending path AND mtime), so the file source replays them as
-    # time-ordered micro-batches — a heartbeat monitor's arrival order
-    for i in range(3):
-        cond = (F.col("ts") >= F.lit(cuts[i])) & (
-            F.col("ts") <= F.lit(cuts[i + 1])
-            if i == 2
-            else F.col("ts") < F.lit(cuts[i + 1])
-        )
-        ev.where(cond).coalesce(1).write.parquet(f"{src}/t{i}")
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    q = (
-        J.stateful_heartbeat_gaps(stream)
-        .writeStream.format("memory")
-        .queryName("t_hb")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "hb_ckpt"))
-        .start()
-    )
-    _drain(q)
+    _replay(spark, tmp_path, "t_hb", J.stateful_heartbeat_gaps, _tertiles(ev))
     got = {
         (r.user_id, r.gap_start_us, r.gap_end_us, r.gap_s)
         for r in spark.sql("SELECT * FROM t_hb").collect()
@@ -526,37 +562,8 @@ def test_stateful_ewma_stream_equals_batch(spark, tmp_path):
         rel_ewma_smoothing,
     )
 
-    import os
-    import time
-
-    src = str(tmp_path / "ew_src")
-    os.makedirs(src)
     ev = _batch_events(spark)
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cuts = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    for i in range(3):
-        cond = (F.col("ts") >= F.lit(cuts[i])) & (
-            F.col("ts") <= F.lit(cuts[i + 1])
-            if i == 2
-            else F.col("ts") < F.lit(cuts[i + 1])
-        )
-        ev.where(cond).coalesce(1).write.parquet(f"{src}/t{i}")
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    q = (
-        J.stateful_ewma(stream)
-        .writeStream.format("memory")
-        .queryName("t_ewma")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ew_ckpt"))
-        .start()
-    )
-    _drain(q)
+    _replay(spark, tmp_path, "t_ewma", J.stateful_ewma, _tertiles(ev))
     got = {}
     for r in spark.sql("SELECT * FROM t_ewma").collect():
         prev = got.get(r.user_id)
@@ -636,41 +643,18 @@ def test_double_fire_stream_equals_batch(spark, tmp_path):
     longs per (user, type)) must emit exactly the pairs the batch
     query (rel_double_fire_events, oracle-checked) reports under a
     time-ordered micro-batch replay."""
-    import os
-    import time
-
     from mrc_spark_jobs_pubmed_spark.plans.timeseries_queries import (
         rel_double_fire_events,
     )
 
-    src = str(tmp_path / "df_src")
-    os.makedirs(src)
     ev = _batch_events(spark)
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cuts = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    for i in range(3):
-        cond = (F.col("ts") >= F.lit(cuts[i])) & (
-            F.col("ts") <= F.lit(cuts[i + 1])
-            if i == 2
-            else F.col("ts") < F.lit(cuts[i + 1])
-        )
-        ev.where(cond).coalesce(1).write.parquet(f"{src}/t{i}")
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    _replay(
+        spark,
+        tmp_path,
+        "t_df",
+        lambda stream: J.stateful_double_fire(stream, gap_s=3600),
+        _tertiles(ev),
     )
-    q = (
-        J.stateful_double_fire(stream, gap_s=3600)
-        .writeStream.format("memory")
-        .queryName("t_df")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "df_ckpt"))
-        .start()
-    )
-    _drain(q)
     got = {
         (r.user_id, r.event_type, r.first_event, r.dup_event, r.gap_ms, r.same_value)
         for r in spark.sql("SELECT * FROM t_df").collect()
@@ -687,40 +671,17 @@ def test_rate_limit_stream_equals_batch(spark, tmp_path):
     per-user arrival window in state) must reproduce the batch
     RANGE-frame window count and throttle decision for every event
     under a time-ordered micro-batch replay."""
-    import os
-    import time
-
     from pyspark.sql import Window
 
     W_S, K = 43200, 2
-    src = str(tmp_path / "rl_src")
-    os.makedirs(src)
     ev = _batch_events(spark)
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cuts = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    for i in range(3):
-        cond = (F.col("ts") >= F.lit(cuts[i])) & (
-            F.col("ts") <= F.lit(cuts[i + 1])
-            if i == 2
-            else F.col("ts") < F.lit(cuts[i + 1])
-        )
-        ev.where(cond).coalesce(1).write.parquet(f"{src}/t{i}")
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    _replay(
+        spark,
+        tmp_path,
+        "t_rl",
+        lambda stream: J.stateful_rate_limit(stream, window_s=W_S, k=K),
+        _tertiles(ev),
     )
-    q = (
-        J.stateful_rate_limit(stream, window_s=W_S, k=K)
-        .writeStream.format("memory")
-        .queryName("t_rl")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "rl_ckpt"))
-        .start()
-    )
-    _drain(q)
     got = {
         (r.user_id, r.event_id, r.event_type, r.t_us, r.win_n, r.throttled)
         for r in spark.sql("SELECT * FROM t_rl").collect()
@@ -763,26 +724,11 @@ def test_burst_detection_stream_equals_batch(spark, tmp_path):
     rows once every real hour is closed by a later event (a sentinel
     event per type, 48 h after the fixture's end, closes the last open
     hour without entering any baseline)."""
-    import os
-    import time
-
     from mrc_spark_jobs_pubmed_spark.plans.timeseries_queries import (
         rel_burst_detection,
     )
 
-    src = str(tmp_path / "bd_src")
-    os.makedirs(src)
     ev = _batch_events(spark)
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cuts = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    for i in range(3):
-        cond = (F.col("ts") >= F.lit(cuts[i])) & (
-            F.col("ts") <= F.lit(cuts[i + 1])
-            if i == 2
-            else F.col("ts") < F.lit(cuts[i + 1])
-        )
-        ev.where(cond).coalesce(1).write.parquet(f"{src}/t{i}")
-        time.sleep(1.1)
     # sentinel: one event per type, 48 h past the end — closes the last
     # real hour; its own hour never closes and never emits
     sent = (
@@ -797,24 +743,10 @@ def test_burst_detection_stream_equals_batch(spark, tmp_path):
             F.lit("{}").alias("props"),
         )
     )
-    sent.select([f.name for f in ev.schema.fields]).coalesce(1).write.parquet(
-        f"{src}/t3"
+    sent = sent.select([f.name for f in ev.schema.fields])
+    _replay(
+        spark, tmp_path, "t_bd", J.stateful_burst_detection, _tertiles(ev) + [sent]
     )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    q = (
-        J.stateful_burst_detection(stream)
-        .writeStream.format("memory")
-        .queryName("t_bd")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "bd_ckpt"))
-        .start()
-    )
-    _drain(q)
     got = {
         (r.event_type, r.hour, r.n, r.base_n)
         for r in spark.sql("SELECT * FROM t_bd").collect()
@@ -830,39 +762,10 @@ def test_queue_wait_stream_equals_batch(spark, tmp_path):
     """Streaming Lindley queue (applyInPandasWithState, three longs per
     type) must emit the identical per-event waits as the batch
     running-min window under a time-ordered replay."""
-    import os
-    import time
-
     from pyspark.sql import Window
 
-    src = str(tmp_path / "qw_src")
-    os.makedirs(src)
     ev = _batch_events(spark)
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cuts = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    for i in range(3):
-        cond = (F.col("ts") >= F.lit(cuts[i])) & (
-            F.col("ts") <= F.lit(cuts[i + 1])
-            if i == 2
-            else F.col("ts") < F.lit(cuts[i + 1])
-        )
-        ev.where(cond).coalesce(1).write.parquet(f"{src}/t{i}")
-        time.sleep(1.1)
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    q = (
-        J.stateful_queue_wait(stream)
-        .writeStream.format("memory")
-        .queryName("t_qw")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "qw_ckpt"))
-        .start()
-    )
-    _drain(q)
+    _replay(spark, tmp_path, "t_qw", J.stateful_queue_wait, _tertiles(ev))
     got = {
         (r.event_type, r.event_id, r.a_us, r.w_us)
         for r in spark.sql("SELECT * FROM t_qw").collect()
@@ -907,26 +810,11 @@ def test_interval_coalesce_stream_equals_batch(spark, tmp_path):
     merged islands once a later arrival closes each one — a sentinel
     event per user, far past the end, drains the final open islands;
     the sentinel's own island never emits."""
-    import os
-    import time
-
     from mrc_spark_jobs_pubmed_spark.plans.timeseries_queries import (
         rel_interval_coalesce,
     )
 
-    src = str(tmp_path / "ic_src")
-    os.makedirs(src)
     ev = _batch_events(spark)
-    lo, hi = ev.agg(F.min("ts"), F.max("ts")).collect()[0]
-    cuts = [lo, lo + (hi - lo) / 3, lo + 2 * (hi - lo) / 3, hi]
-    for i in range(3):
-        cond = (F.col("ts") >= F.lit(cuts[i])) & (
-            F.col("ts") <= F.lit(cuts[i + 1])
-            if i == 2
-            else F.col("ts") < F.lit(cuts[i + 1])
-        )
-        ev.where(cond).coalesce(1).write.parquet(f"{src}/t{i}")
-        time.sleep(1.1)
     # sentinel: one zero-length event per user, 30 days past the end —
     # beyond any open island's max end, so it closes the last real island
     sent = (
@@ -941,24 +829,14 @@ def test_interval_coalesce_stream_equals_batch(spark, tmp_path):
             F.lit("{}").alias("props"),
         )
     )
-    sent.select([f.name for f in ev.schema.fields]).coalesce(1).write.parquet(
-        f"{src}/t3"
+    sent = sent.select([f.name for f in ev.schema.fields])
+    _replay(
+        spark,
+        tmp_path,
+        "t_ic",
+        J.stateful_interval_coalesce,
+        _tertiles(ev) + [sent],
     )
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
-    )
-    q = (
-        J.stateful_interval_coalesce(stream)
-        .writeStream.format("memory")
-        .queryName("t_ic")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "ic_ckpt"))
-        .start()
-    )
-    _drain(q)
     got = {
         (r.user_id, r.n_islands, r.covered_us, r.longest_us)
         for r in spark.sql(
@@ -980,47 +858,24 @@ def test_interval_coalesce_cursor_drops_behind_cursor_late_event(spark, tmp_path
     even inside the watermark — emitted islands are final and cannot be
     retracted in update mode. The late event here would have BRIDGED the
     two islands into one; the contract says it must not."""
-    import datetime
-    import os
-
-    src = str(tmp_path / "icc_src")
-    os.makedirs(src)
-    T0 = datetime.datetime(2024, 1, 1, 12, 0, 0)
-
-    def ev_df(rows):
-        return spark.createDataFrame(
-            [
-                (eid, T0 + datetime.timedelta(seconds=dt), 7, "view", val, "{}")
-                for eid, dt, val in rows
-            ],
-            "event_id long, ts timestamp, user_id long,"
-            " event_type string, value double, props string",
-        )
-
-    # batch 0: island A [0s,10s) closed by the event at 100s (cursor -> 100s)
-    ev_df([(1, 0, 10.0), (2, 100, 10.0)]).coalesce(1).write.parquet(f"{src}/t0")
-    # batch 1: late event at 50s, inside the 10-min watermark but behind
-    # the (100s, 2) cursor; service 200s would bridge A into [0s,250s)
-    ev_df([(3, 50, 200.0)]).coalesce(1).write.parquet(f"{src}/t1")
-    # batch 2: sentinel far past the end drains island B [100s,110s)
-    ev_df([(9, 3000, 0.0)]).coalesce(1).write.parquet(f"{src}/t2")
-
-    stream = (
-        spark.readStream.schema(ev_df([]).schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("recursiveFileLookup", "true")
-        .parquet(src)
+    _replay(
+        spark,
+        tmp_path,
+        "t_icc",
+        J.stateful_interval_coalesce,
+        [
+            # batch 0: island A [0s,10s) closed by the event at 100s
+            # (cursor -> 100s)
+            _events(spark, [(1, 0, 10.0), (2, 100, 10.0)]),
+            # batch 1: late event at 50s, inside the 10-min watermark but
+            # behind the (100s, 2) cursor; service 200s would bridge A
+            # into [0s,250s)
+            _events(spark, [(3, 50, 200.0)]),
+            # batch 2: sentinel far past the end drains island B [100s,110s)
+            _events(spark, [(9, 3000, 0.0)]),
+        ],
     )
-    q = (
-        J.stateful_interval_coalesce(stream)
-        .writeStream.format("memory")
-        .queryName("t_icc")
-        .outputMode("update")
-        .option("checkpointLocation", str(tmp_path / "icc_ckpt"))
-        .start()
-    )
-    _drain(q)
-    base = int(T0.timestamp()) * 1_000_000
+    base = int(_T0.timestamp()) * 1_000_000
     got = {
         (r.user_id, r.start_us - base, r.end_us - base, r.covered_us)
         for r in spark.sql("SELECT * FROM t_icc").collect()
@@ -1031,3 +886,68 @@ def test_interval_coalesce_cursor_drops_behind_cursor_late_event(spark, tmp_path
         (7, 0, 10_000_000, 10_000_000),
         (7, 100_000_000, 110_000_000, 10_000_000),
     }
+
+
+# Per twin: batch 0, which sets the replay cursor; batch 1 without its late
+# event; and that late event, inside the 10-min watermark but behind the
+# cursor. Rows are (event_id, seconds after _T0, value) of user 7's views.
+_CURSOR_CASES = {
+    # the gap (5000s, 9000s); folded, 4800s would make it (4800s, 9000s)
+    "heartbeat_gaps": (
+        J.stateful_heartbeat_gaps,
+        [(1, 0, 1.0), (2, 5000, 1.0)],
+        [(4, 9000, 1.0)],
+        (3, 4800, 1.0),
+    ),
+    # the pair (2, 4); folded, 900s would pair 2 with 3 and 3 with 4
+    "double_fire": (
+        J.stateful_double_fire,
+        [(1, 0, 1.0), (2, 1000, 1.0)],
+        [(4, 1100, 1.0)],
+        (3, 900, 1.0),
+    ),
+    # event 4 sees 3 arrivals in its window; folded, 50s would be a fourth
+    "rate_limit": (
+        J.stateful_rate_limit,
+        [(1, 0, 1.0), (2, 100, 1.0)],
+        [(4, 200, 1.0)],
+        (3, 50, 1.0),
+    ),
+    # batch 0 decides hour 1 and leaves hour 2 open; folded, an event of
+    # the decided hour 1 would decide hour 1 a second time
+    "burst_detection": (
+        J.stateful_burst_detection,
+        [(1, 100, 1.0), (2, 3700, 1.0), (3, 7210, 1.0)],
+        [(5, 10810, 1.0)],
+        (4, 7140, 1.0),
+    ),
+    # folded, the 200s job arriving at 50s would queue event 4 behind it
+    "queue_wait": (
+        J.stateful_queue_wait,
+        [(1, 0, 10.0), (2, 100, 1.0)],
+        [(4, 200, 0.0)],
+        (3, 50, 200.0),
+    ),
+}
+
+
+@pytest.mark.parametrize("twin", sorted(_CURSOR_CASES))
+def test_replay_cursor_drops_behind_cursor_event(spark, tmp_path, twin):
+    """Replay-cursor contract of the NoTimeout twins: a batch-1 event at or
+    behind the cursor batch 0 left in state is dropped, so the emitted rows
+    equal those of the same replay without it (emitted rows are final;
+    update mode cannot retract)."""
+    job, first, second, late = _CURSOR_CASES[twin]
+
+    def emitted(name, batch1):
+        _replay(
+            spark,
+            tmp_path,
+            name,
+            job,
+            [_events(spark, first), _events(spark, batch1)],
+        )
+        return sorted(tuple(r) for r in spark.sql(f"SELECT * FROM {name}").collect())
+
+    want = emitted(f"t_cur_{twin}", second)
+    assert emitted(f"t_cur_late_{twin}", [late] + second) == want and want
