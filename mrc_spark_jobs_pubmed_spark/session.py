@@ -26,6 +26,8 @@ _JVM_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "jvm")
 _NIO_FS_SOURCE = os.path.join(_JVM_DIR, "NioLocalFs.java")
 _BUILD_DIR = os.path.join(_JVM_DIR, ".build")
 _NIO_FS_CLASS = "mrc_spark_jobs_pubmed_spark.jvm.NioLocalFs"
+_PY_DAEMON_MODULE = "mrc_spark_jobs_pubmed_spark.pydaemon"
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def hadoop_path(spark: SparkSession, path: str):
@@ -76,6 +78,25 @@ def nio_fs_jar() -> str:
     return jar
 
 
+def local_conf(master: str | None) -> dict[str, str]:
+    """Settings that hold only when every executor runs on this host: the
+    ``NioLocalFs`` filesystem and the ``pydaemon`` Python-worker daemon.
+    Empty for any other master."""
+    if not (master == "local" or (master or "").startswith("local[")):
+        return {}
+    return {
+        # executors are threads of the driver JVM, so the driver's class
+        # path reaches every task
+        "spark.driver.extraClassPath": nio_fs_jar(),
+        "spark.hadoop.fs.file.impl": _NIO_FS_CLASS,
+        "spark.hadoop.fs.AbstractFileSystem.file.impl": _NIO_FS_CLASS + "$Fs",
+        # the daemon is this package's module, so its workers need this
+        # package's root on their path whatever the driver's working directory
+        "spark.python.daemon.module": _PY_DAEMON_MODULE,
+        "spark.executorEnv.PYTHONPATH": _PACKAGE_ROOT,
+    }
+
+
 def get_session(
     app_name: str = "mrc-spark-jobs-pubmed-spark",
     master: str | None = None,
@@ -93,7 +114,10 @@ def get_session(
     A local master's ``file:`` filesystem is ``jvm/NioLocalFs.java``
     (compiled with javac on first use): Hadoop's local filesystem minus
     the ``chmod``/``readlink`` child processes it starts per file when,
-    as here, its native library is absent. Other masters keep Hadoop's.
+    as here, its native library is absent. Its Python workers fork from
+    ``pydaemon``, which stops every task re-reading the unchanged zip
+    archives on the workers' path. Other masters keep Hadoop's filesystem
+    and ``pyspark.daemon``.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     # local[N] runs all N executor threads in the driver JVM; Spark's 1g
@@ -171,15 +195,7 @@ def get_session(
         master = f"local[{cpus}]"
     if master is not None:
         builder = builder.master(master)
-    if master == "local" or (master or "").startswith("local["):
-        # executors are threads of the driver JVM, so the driver's class
-        # path reaches every task
-        builder = (
-            builder.config("spark.driver.extraClassPath", nio_fs_jar())
-            .config("spark.hadoop.fs.file.impl", _NIO_FS_CLASS)
-            .config("spark.hadoop.fs.AbstractFileSystem.file.impl", _NIO_FS_CLASS + "$Fs")
-        )
-    for k, v in (extra_conf or {}).items():
+    for k, v in {**local_conf(master), **(extra_conf or {})}.items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
