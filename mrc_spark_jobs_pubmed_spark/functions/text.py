@@ -439,8 +439,11 @@ def lemma_pos_sql(expr: str, dialect: str = DUCKDB) -> str:
     the noun rule table.
     """
     (adverb, _), (verb, _), (adjective, _) = POS_SUFFIX_RULES
+    # one hashed IN (an InSet past 10 literals) guards the 46 equalities:
+    # `transform` runs interpreted, so most tokens pay one lookup, not 46
+    irregular = stoplist_sql([word for word, _ in VERB_IRREGULAR], dialect)
     whens = [
-        *_exact_whens(expr, VERB_IRREGULAR, dialect),
+        (f"{expr} IN ({irregular})", _case(_exact_whens(expr, VERB_IRREGULAR, dialect), expr)),
         (f"{expr} IN ({stoplist_sql(VERB_KEEP, dialect)})", expr),
         (_matches(expr, adverb, dialect), expr),
         (_matches(expr, verb, dialect), _verb_lemma_sql(expr, dialect)),

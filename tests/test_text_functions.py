@@ -177,16 +177,20 @@ def test_pos_lemma_sql_mirror_matches_column(spark):
 
     from mrc_spark_jobs_pubmed_spark.functions.stopwords import MRC_STOPWORDS, STOPWORDS
     from mrc_spark_jobs_pubmed_spark.functions.text import (
+        VERB_IRREGULAR,
+        VERB_KEEP,
         clean_text_sql,
         lemma_pos_sql,
         lemma_sql,
         stoplist_sql,
     )
 
+    # every irregular form passes the hashed IN guard to its own equality
+    pos_cases = {**POS_LEMMA_CASES, **dict(VERB_IRREGULAR), **{w: w for w in VERB_KEEP}}
     for compile_sql, cases in (
         (clean_text_sql, CLEAN_CASES),
         (lemma_sql, NOUN_LEMMA_CASES),
-        (lemma_pos_sql, POS_LEMMA_CASES),
+        (lemma_pos_sql, pos_cases),
     ):
         df = spark.createDataFrame([(t,) for t in cases], "tok string")
         on_spark = dict(df.select("tok", F.expr(compile_sql("tok", "spark"))).collect())
@@ -201,6 +205,17 @@ def test_pos_lemma_sql_mirror_matches_column(spark):
         on_spark = spark.range(1).select(F.expr(f"array({stoplist_sql(words, 'spark')})"))
         assert on_spark.first()[0] == list(words)
         assert duckdb.execute(f"SELECT [{stoplist_sql(words)}]").fetchone()[0] == list(words)
+
+
+def test_pos_lemma_irregular_guard_is_a_hashed_set(spark):
+    """The Spark dialect's irregular-verb guard optimizes to one InSet."""
+    from mrc_spark_jobs_pubmed_spark.functions.text import VERB_IRREGULAR, lemma_pos_sql
+
+    df = spark.range(3).selectExpr("cast(id AS string) AS tok").select(
+        F.expr(lemma_pos_sql("tok", "spark")))
+    plan = df._jdf.queryExecution().optimizedPlan().toString()
+    guard = "INSET " + ", ".join(sorted(word for word, _ in VERB_IRREGULAR)) + " THEN CASE"
+    assert guard in plan
 
 
 def test_keywords_v2_golden(spark):
