@@ -54,7 +54,10 @@ def test_only_a_changed_archive_is_read_again(zip_module, monkeypatch):
         importlib.invalidate_caches()
     assert reads.count(archive) == 0
 
-    _write_zip(archive, name, "VALUE = 'rewritten in place'\n")  # same inode, new size
+    before = os.stat(archive)
+    _write_zip(archive, name, "VALUE = 'rewritten in place'\n")
+    os.utime(archive, ns=(before.st_atime_ns, before.st_mtime_ns))  # only the size differs
+    assert os.stat(archive).st_ino == before.st_ino
     importlib.invalidate_caches()
     importlib.invalidate_caches()
     assert reads.count(archive) == 1
