@@ -10,11 +10,11 @@ cases AQE does not cover:
   over a hot key — partial aggregation doesn't bound the final reducer);
 * a shuffle join against a small-but-not-broadcastable side where one
   key dominates and AQE's split is unavailable (e.g. statically planned
-  sort-merge).
+  sort-merge); `rel_skew_salted_join` salts its join inline.
 
-Both helpers are pure DataFrame rewrites: salt = deterministic hash of a
-caller-chosen expression, so results are reproducible run to run and the
-rewrite is provably semantics-preserving (oracle-checked by
+The helpers here are pure DataFrame rewrites: salt = deterministic hash
+of a caller-chosen expression, so results are reproducible run to run and
+the rewrite is provably semantics-preserving (oracle-checked by
 `rel_salted_agg`).
 """
 
@@ -33,29 +33,6 @@ def with_salt(df: DataFrame, salt_from: Column, n_salts: int = N_SALTS) -> DataF
     key's rows spread ~uniformly over the salts.
     """
     return df.withColumn("_salt", F.pmod(F.xxhash64(salt_from), F.lit(n_salts)))
-
-
-def salted_join(
-    big: DataFrame,
-    small: DataFrame,
-    on: list[str],
-    salt_from: Column,
-    n_salts: int = N_SALTS,
-    how: str = "inner",
-) -> DataFrame:
-    """Equi-join with the hot side salted and the small side replicated.
-
-    big gets `_salt = hash(salt_from) % n`; small is exploded n_salts
-    ways, so every (key, salt) bucket still finds its match. The hot
-    key's shuffle partition is split n ways at the cost of an n× blowup
-    of the small side — the classic trade when broadcast is too big and
-    AQE can't split the stage.
-    """
-    big_s = with_salt(big, salt_from, n_salts)
-    small_s = small.withColumn(
-        "_salt", F.explode(F.sequence(F.lit(0), F.lit(n_salts - 1)))
-    )
-    return big_s.join(small_s, [*on, "_salt"], how).drop("_salt")
 
 
 def salted_collect_set(

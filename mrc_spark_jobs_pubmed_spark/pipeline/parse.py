@@ -51,40 +51,23 @@ def reads_whole(payload: Column) -> Column:
     )
 
 
-def parse_articles(fetched: DataFrame, require_abstract: bool = True) -> DataFrame:
-    """(page_key, payload NDJSON) → (pmid, year, abstract).
-
-    explode(split(payload, '\\n')) gives one row per NDJSON line (A9);
-    from_json applies the declared schema (A8); the has-abstract filter
-    is a Catalyst predicate on the nested field (A10) and the year comes
-    from the page key, not a filename substring hack (A12, cf.
-    extract_keywords_from_all_abstracts.py:92).
-    """
-    lines = fetched.filter(F.col("payload").isNotNull()).select(
-        "page_key",
-        "year",
-        F.explode(F.split("payload", "\n")).alias("line"),
-    )
-    parsed = lines.select(
-        "page_key",
-        "year",
-        F.from_json("line", ARTICLE_JSON_SCHEMA).alias("rec"),
-    ).filter(F.col("rec.pmid").isNotNull())
-    out = parsed.select(
-        F.col("rec.pmid").alias("pmid"),
-        "year",
-        F.col("rec.medent.abstract").alias("abstract"),
-        "page_key",
-    )
-    if require_abstract:
-        out = out.filter(F.col("abstract").isNotNull())
-    return out
+def parse_articles(fetched: DataFrame) -> DataFrame:
+    """(page_key, payload NDJSON) → (pmid, year, abstract, page_key): the
+    good side of `parse_articles_quarantine`, with the has-abstract filter
+    as a Catalyst predicate on the nested field (A10)."""
+    good, _ = parse_articles_quarantine(fetched)
+    return good.filter(F.col("abstract").isNotNull())
 
 
 def parse_articles_quarantine(fetched: DataFrame) -> tuple[DataFrame, DataFrame]:
-    """Like parse_articles, but malformed lines are QUARANTINED, not
-    silently dropped: returns (articles, rejects) where rejects carries
-    the raw line + page_key for replay/inspection.
+    """(page_key, payload NDJSON) → (articles, rejects): every record with
+    a pmid, abstract or not, and every malformed line with its page_key
+    for replay/inspection.
+
+    explode(split(payload, '\\n')) gives one row per NDJSON line (A9);
+    from_json applies the declared schema (A8); the year comes from the
+    page key, not a filename substring hack (A12, cf.
+    extract_keywords_from_all_abstracts.py:92).
 
     At scale silent drops are invisible data loss — a feed change that
     breaks 1% of lines should surface as a countable rejects table, the

@@ -1,6 +1,7 @@
-"""Property checks for the round-3 late operators: the winnowing match
-guarantee, keep-best selection invariants, and SCD2 interval integrity —
-the algorithmic contracts the oracle equality alone doesn't state."""
+"""Algorithmic contracts the oracle equality alone doesn't state: the
+winnowing match guarantee, keep-best selection invariants, SCD2 interval
+integrity, k-NN symmetry, half-up integer means and lexicographic tie
+cuts."""
 
 from __future__ import annotations
 

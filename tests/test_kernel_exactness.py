@@ -1,6 +1,6 @@
-"""Property tests for the round-5 operator batch: kernel-vs-definitional
-equality for the GEMM triplet miner, exactly-once accounting for the
-binned interval join, and the rate-limit RANGE-peer contract."""
+"""Kernels against their definitional forms: the GEMM triplet miner,
+exactly-once accounting of the binned interval join, the rate-limit
+RANGE-peer contract and the interval-coalesce closed-form identities."""
 
 from __future__ import annotations
 
@@ -169,7 +169,7 @@ def test_rate_limit_peers_share_decision(spark):
 
 
 def test_triplet_gemm_precomputed_counts_skip_count_actions(spark):
-    """r6 ADVICE: the adaptive default runs emb.count()/anchors.count();
+    """The adaptive default runs emb.count()/anchors.count();
     callers with expensive lineage can pass n_corpus/n_anchors instead.
     The precomputed-counts path must produce the identical result (same
     chunk arithmetic, zero count actions on the inputs)."""
@@ -195,7 +195,7 @@ def test_triplet_gemm_precomputed_counts_skip_count_actions(spark):
 
 
 def test_interval_coalesce_identities_vs_brute_force(spark, tmp_path):
-    """The r7 single-pass closed-form identities (covered = sum of
+    """The single-pass closed-form identities (covered = sum of
     closed-island lengths + tail; longest = max of the same) must equal
     brute-force interval merging on adversarial inputs: ties on a_us,
     zero-length intervals, exact touching (a == prior max end, which

@@ -90,25 +90,6 @@ def test_fingerprint_normalization_invariance(spark):
     assert len(fp[1]) == 16
 
 
-def test_salted_join_matches_plain_join(spark):
-    from mrc_spark_jobs_pubmed_spark.operators import skew
-
-    # one hot key (0) dominating the big side
-    big = spark.range(0, 2000).select(
-        (F.when(F.col("id") % 4 == 0, 0).otherwise(F.col("id") % 50)).alias("k"),
-        F.col("id").alias("row_id"),
-    )
-    small = spark.createDataFrame([(k, f"v{k}") for k in range(50)], ["k", "v"])
-    plain = {tuple(r) for r in big.join(small, ["k"]).collect()}
-    salted = {
-        tuple(r)
-        for r in skew.salted_join(
-            big, small, ["k"], salt_from=F.col("row_id"), n_salts=4
-        ).collect()
-    }
-    assert salted == plain and len(plain) == 2000
-
-
 def test_blocked_pairs_match_nested_loop_form(spark):
     # the block-GEMM tiling must select exactly the same top pairs as
     # the naive all-pairs join (exact operator, not approximate)

@@ -83,8 +83,8 @@ def test_parse_filters_missing_abstract_and_derives_year(spark):
     )
     rows = parse.parse_articles(fetched).collect()
     assert [(r.pmid, r.year) for r in rows] == [("1", 2020)]
-    both = parse.parse_articles(fetched, require_abstract=False).collect()
-    assert {r.pmid for r in both} == {"1", "2"}
+    good, _ = parse.parse_articles_quarantine(fetched)
+    assert {r.pmid for r in good.collect()} == {"1", "2"}
 
 
 def test_keywords_v1_golden(spark):

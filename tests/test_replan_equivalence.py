@@ -1,4 +1,4 @@
-"""Round-11 replan regression tests.
+"""Replans against the plans they replaced.
 
 Each optimization that restructured an operator's internals gets a
 fixture that exercises the property the rewrite leans on:
@@ -20,16 +20,9 @@ fixture that exercises the property the rewrite leans on:
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from mrc_spark_jobs_pubmed_spark.plans.tpch_more_queries import waiting_suppliers
-from mrc_spark_jobs_pubmed_spark.session import get_session
-
-
-@pytest.fixture(scope="module")
-def spark():
-    return get_session(app_name="r11-replan-tests")
 
 
 def test_q21_one_pass_aggregate_matches_definitional(spark):
@@ -89,7 +82,7 @@ def test_kcore_keepset_loop_matches_per_round_peel(spark):
             .where(F.col("c") >= k).select("src")
         )
 
-    # definitional per-round peel (the r10 shape)
+    # definitional per-round peel (the replaced shape)
     g_def = edges
     for _ in range(KCORE_ROUNDS):
         keep = deg_keep(g_def)
@@ -98,7 +91,7 @@ def test_kcore_keepset_loop_matches_per_round_peel(spark):
             .join(keep.select(F.col("src").alias("dst")), "dst")
             .select("src", "dst")
         )
-    # keep-set-only loop (the r11 shape)
+    # keep-set-only loop (the shipped shape)
     keep = None
     for _ in range(KCORE_ROUNDS):
         g_i = edges if keep is None else (
@@ -211,7 +204,7 @@ def test_resize_media_tiling_and_empty_match_reference(spark):
 
 
 def test_retrieval_metrics_gemm_branch_matches_inline_branch(spark, monkeypatch):
-    # sim_retrieval_metrics dispatches on RM_GEMM_MIN_ROWS (r11): above
+    # sim_retrieval_metrics dispatches on RM_GEMM_MIN_ROWS: above
     # it the per-query top-k comes from the shared GEMM stage with
     # labels re-attached by broadcast joins; below it the definitional
     # inline window keeps label in the single scan. The dispatch is

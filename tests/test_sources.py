@@ -1,65 +1,11 @@
-"""Source/reader surface tests: csv/json/text with explicit schemas,
-glob listing, whole-file reads, and the Python UDTF table-function seam."""
+"""Source surface tests: the `format("pubmed")` data source (batch and
+streaming), the events-fixture loader's timestamp handling, and the
+Python UDTF table-function seam."""
 
 from __future__ import annotations
 
-import json
-
 import pytest
-from pyspark.sql import functions as F
-from pyspark.sql import types as T
 from pyspark.sql.functions import udtf
-
-from mrc_spark_jobs_pubmed_spark.sources import readers
-from mrc_spark_jobs_pubmed_spark.sources.catalog import load_table
-
-SF = "/root/testdata/sf0.001"
-
-
-def test_csv_roundtrip_with_schema(spark, tmp_path):
-    out = str(tmp_path / "csv")
-    df = spark.createDataFrame([(1, "a"), (2, "b")], ["k", "v"])
-    df.write.csv(out)
-    schema = T.StructType(
-        [T.StructField("k", T.LongType()), T.StructField("v", T.StringType())]
-    )
-    back = readers.read_csv(spark, out, schema)
-    assert {(r.k, r.v) for r in back.collect()} == {(1, "a"), (2, "b")}
-
-
-def test_ndjson_read_with_nested_schema(spark, tmp_path):
-    p = tmp_path / "articles.ndjson"
-    p.write_text(
-        "\n".join(
-            [
-                json.dumps({"pmid": "1", "medent": {"abstract": "text one"}}),
-                json.dumps({"pmid": "2", "medent": {}}),
-            ]
-        )
-    )
-    schema = T.StructType(
-        [
-            T.StructField("pmid", T.StringType()),
-            T.StructField(
-                "medent", T.StructType([T.StructField("abstract", T.StringType())])
-            ),
-        ]
-    )
-    df = readers.read_json(spark, str(p), schema)
-    assert df.filter(F.col("medent.abstract").isNotNull()).count() == 1
-
-
-def test_wholetext_read_with_lineage_and_glob(spark, tmp_path):
-    (tmp_path / "2019_file.txt").write_text("line a\nline b")
-    (tmp_path / "2020_file.txt").write_text("line c")
-    # glob listing replaces the reference's driver-side prefix listing (A6)
-    df = readers.read_text(spark, str(tmp_path / "20*_file.txt"), wholetext=True)
-    rows = df.collect()
-    assert len(rows) == 2 and all("file.txt" in r.source_file for r in rows)
-    year = df.select(
-        F.regexp_extract(F.input_file_name(), r"(\d{4})_file", 1).alias("year")
-    )
-    assert {r.year for r in year.collect()} == {"2019", "2020"}
 
 
 def test_python_udtf_lateral_join(spark):
@@ -139,19 +85,6 @@ def test_pubmed_datasource_streaming_microbatches(spark, tmp_path):
     assert {tuple(r) for r in got.collect()} == {tuple(r) for r in batch.collect()}
     n_batches = len([p for p in q.recentProgress if p["numInputRows"] > 0])
     assert n_batches >= 3
-
-
-def test_orc_roundtrip_with_pushdown(spark, tmp_path):
-    out = str(tmp_path / "orc_events")
-    events = load_table(spark, "events", SF).limit(200)
-    events.write.orc(out)
-    back = readers.read_orc(spark, out, events.schema).filter(F.col("value") > 0)
-    assert back.count() == events.filter(F.col("value") > 0).count()
-    plan = back._sc._jvm.PythonSQLUtils.explainString(
-        back._jdf.queryExecution(), "formatted"
-    )
-    # filter reaches the ORC scan, projection stays schema-pruned
-    assert "PushedFilters: [IsNotNull(value), GreaterThan(value," in plan
 
 
 def test_pubmed_stream_offsets_monotonic_across_restart():

@@ -6,6 +6,9 @@ from __future__ import annotations
 
 import datetime
 import os
+import signal
+import subprocess
+import sys
 import time
 
 import pandas as pd
@@ -13,10 +16,12 @@ import pytest
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from mrc_spark_jobs_pubmed_spark.plans.timeseries_queries import rel_interval_coalesce
 from mrc_spark_jobs_pubmed_spark.sources.catalog import load_table
 from mrc_spark_jobs_pubmed_spark.streaming import jobs as J
 
 SF = "/root/testdata/sf0.001"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def _batch_events(spark):
@@ -61,26 +66,35 @@ def _tertiles(ev):
     ]
 
 
-def _replay(spark, tmp_path, name, job, frames):
-    """Replay `frames` through `job`, one single-file micro-batch each and
-    in list order, into the update-mode memory sink `name`.
+def _write_feed(src, frames):
+    """Write `frames` under `src` as one single-file micro-batch each.
 
     The file source takes files in mtime order, so each file gets an mtime
     one second after the previous one's."""
-    src = tmp_path / f"{name}_src"
     now = time.time()
     for i, df in enumerate(frames):
         df.coalesce(1).write.parquet(str(src / f"t{i}"))
         for f in (src / f"t{i}").iterdir():
             os.utime(f, (now - len(frames) + i,) * 2)
-    stream = (
-        spark.readStream.schema(frames[0].schema)
+
+
+def _feed_stream(spark, src, schema):
+    return (
+        spark.readStream.schema(schema)
         .option("maxFilesPerTrigger", "1")
         .option("recursiveFileLookup", "true")
         .parquet(str(src))
     )
+
+
+def _replay(spark, tmp_path, name, job, frames):
+    """Replay `frames` through `job`, one single-file micro-batch each and
+    in list order, into the update-mode memory sink `name`; returns the
+    stopped query."""
+    src = tmp_path / f"{name}_src"
+    _write_feed(src, frames)
     q = (
-        job(stream)
+        job(_feed_stream(spark, src, frames[0].schema))
         .writeStream.format("memory")
         .queryName(name)
         .outputMode("update")
@@ -88,6 +102,48 @@ def _replay(spark, tmp_path, name, job, frames):
         .start()
     )
     _drain(q)
+    return q
+
+
+def _islands(df):
+    """The (user_id, n_islands, covered_us, longest_us) rows of `df`."""
+    return {
+        (r.user_id, r.n_islands, r.covered_us, r.longest_us)
+        for r in df.collect()
+    }
+
+
+def _island_rollup(df):
+    """interval_coalesce twin output rolled up to the batch query's rows."""
+    return df.groupBy("user_id").agg(
+        F.count("*").alias("n_islands"),
+        F.sum("covered_us").alias("covered_us"),
+        F.max("covered_us").alias("longest_us"),
+    )
+
+
+def _state_rows(q):
+    """stateOperators[0].numRowsTotal in the last progress of `q`."""
+    return q.recentProgress[-1]["stateOperators"][0]["numRowsTotal"]
+
+
+def _user_sentinel(ev):
+    """One zero-length event per user, 30 days past the user's last
+    event: beyond any open island's max end, so it closes the user's last
+    real island (interval_coalesce); its own island never emits."""
+    return (
+        ev.groupBy("user_id")
+        .agg(F.max("ts").alias("mx"))
+        .select(
+            F.lit(10**9).cast("long").alias("event_id"),
+            (F.col("mx") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
+            "user_id",
+            F.lit("view").alias("event_type"),
+            F.lit(0.0).alias("value"),
+            F.lit("{}").alias("props"),
+        )
+        .select([f.name for f in ev.schema.fields])
+    )
 
 
 def test_tumbling_stream_equals_batch(spark):
@@ -409,6 +465,17 @@ def test_cdc_apply_stream_equals_batch(spark, tmp_path):
         for r in J.cdc_apply_batch(_batch_events(spark)).collect()
     }
     assert got == want and len(got) > 0
+    # the state copy holds exactly one row per user ever seen, live or
+    # deleted: the key domain, never the stream volume
+    state = J.read_state(spark, out + "_state", q.lastProgress["batchId"])
+    users = [r.user_id for r in state.collect()]
+    n_users = _batch_events(spark).select("user_id").distinct().count()
+    assert len(users) == len(set(users)) == n_users
+    # tombstones stay in state (no resurrection by a late older upsert)
+    # while the serving table leaves them out
+    tombs = {r.user_id for r in state.where(F.col("op") == "delete").collect()}
+    assert tombs and not tombs & got.keys()
+    assert len(got) == n_users - len(tombs)
 
 
 def test_heartbeat_gaps_stream_equals_batch(spark, tmp_path):
@@ -437,7 +504,7 @@ def test_heartbeat_gaps_stream_equals_batch(spark, tmp_path):
 
 
 def test_cdc_apply_resumes_from_checkpoint(spark, tmp_path):
-    """Kill-and-restart recovery: the CDC apply must resume from its
+    """Stop-and-restart recovery: the CDC apply must resume from its
     checkpoint — files that arrive after a stop are merged on restart
     (same checkpoint, same state path) and the final serving table
     equals the batch full-replay. This is the A5 skip-if-exists resume
@@ -765,7 +832,7 @@ def test_queue_wait_stream_equals_batch(spark, tmp_path):
     from pyspark.sql import Window
 
     ev = _batch_events(spark)
-    _replay(spark, tmp_path, "t_qw", J.stateful_queue_wait, _tertiles(ev))
+    q = _replay(spark, tmp_path, "t_qw", J.stateful_queue_wait, _tertiles(ev))
     got = {
         (r.event_type, r.event_id, r.a_us, r.w_us)
         for r in spark.sql("SELECT * FROM t_qw").collect()
@@ -802,6 +869,9 @@ def test_queue_wait_stream_equals_batch(spark, tmp_path):
     }
     assert got == want and len(want) > 0
     assert any(t[3] > 0 for t in want)  # queue actually backs up somewhere
+    # three longs per event type: the state is the type domain, however
+    # many events stream through
+    assert _state_rows(q) == ev.select("event_type").distinct().count()
 
 
 def test_interval_coalesce_stream_equals_batch(spark, tmp_path):
@@ -810,46 +880,19 @@ def test_interval_coalesce_stream_equals_batch(spark, tmp_path):
     merged islands once a later arrival closes each one — a sentinel
     event per user, far past the end, drains the final open islands;
     the sentinel's own island never emits."""
-    from mrc_spark_jobs_pubmed_spark.plans.timeseries_queries import (
-        rel_interval_coalesce,
-    )
-
     ev = _batch_events(spark)
-    # sentinel: one zero-length event per user, 30 days past the end —
-    # beyond any open island's max end, so it closes the last real island
-    sent = (
-        ev.groupBy("user_id")
-        .agg(F.max("ts").alias("mx"))
-        .select(
-            F.lit(10**9).cast("long").alias("event_id"),
-            (F.col("mx") + F.expr("INTERVAL 30 DAYS")).alias("ts"),
-            "user_id",
-            F.lit("view").alias("event_type"),
-            F.lit(0.0).alias("value"),
-            F.lit("{}").alias("props"),
-        )
-    )
-    sent = sent.select([f.name for f in ev.schema.fields])
-    _replay(
+    q = _replay(
         spark,
         tmp_path,
         "t_ic",
         J.stateful_interval_coalesce,
-        _tertiles(ev) + [sent],
+        _tertiles(ev) + [_user_sentinel(ev)],
     )
-    got = {
-        (r.user_id, r.n_islands, r.covered_us, r.longest_us)
-        for r in spark.sql(
-            "SELECT user_id, count(*) AS n_islands,"
-            " sum(covered_us) AS covered_us, max(covered_us) AS longest_us"
-            " FROM t_ic GROUP BY user_id"
-        ).collect()
-    }
-    want = {
-        (r.user_id, r.n_islands, r.covered_us, r.longest_us)
-        for r in rel_interval_coalesce(spark, SF).collect()
-    }
-    assert got == want and len(want) > 0
+    want = _islands(rel_interval_coalesce(spark, SF))
+    assert _islands(_island_rollup(spark.table("t_ic"))) == want and want
+    # two longs (+ the replay cursor) per user: the state is the user
+    # domain; the sentinel's own open island keeps every user in it
+    assert _state_rows(q) == ev.select("user_id").distinct().count()
 
 
 def test_interval_coalesce_cursor_drops_behind_cursor_late_event(spark, tmp_path):
@@ -951,3 +994,129 @@ def test_replay_cursor_drops_behind_cursor_event(spark, tmp_path, twin):
 
     want = emitted(f"t_cur_{twin}", second)
     assert emitted(f"t_cur_late_{twin}", [late] + second) == want and want
+
+
+# --- hard kill and restart ---------------------------------------------------
+
+_KILL_AT = 1  # the micro-batch a crashing run dies inside
+
+
+def _coalesce_to_files(stream, out, ckpt, kill_at=None):
+    """interval_coalesce into one parquet directory per micro-batch, which
+    a re-executed batch overwrites, so at-least-once delivery cannot
+    duplicate rows. With `kill_at`, the process dies right after writing
+    that batch's output, before the batch commits."""
+
+    def sink(bdf, bid):
+        bdf.write.mode("overwrite").parquet(f"{out}/b{bid:05d}")
+        if bid == kill_at:
+            os._exit(9)
+
+    return (
+        J.stateful_interval_coalesce(stream)
+        .writeStream.outputMode("update")
+        .foreachBatch(sink)
+        .option("checkpointLocation", ckpt)
+        .start()
+    )
+
+
+def _bitmap_to_files(stream, out, ckpt, kill_at=None):
+    """run_bitmap_distinct_to_files. With `kill_at`, the process dies right
+    after publishing that batch's state version, before the serving table
+    and the commit: the restart merges the batch into a state that already
+    holds it."""
+    if kill_at is not None:
+        write_state = J.write_state
+
+        def write_then_die(df, state_dir, batch_id):
+            write_state(df, state_dir, batch_id)
+            if batch_id == kill_at:
+                os._exit(9)
+
+        J.write_state = write_then_die
+    return J.run_bitmap_distinct_to_files(stream, out, ckpt)
+
+
+# job -> (feed frames, start, served rows of an output dir, batch rows)
+_CRASH_JOBS = {
+    "interval_coalesce": (
+        lambda ev: _tertiles(ev) + [_user_sentinel(ev)],
+        _coalesce_to_files,
+        lambda spark, out: _islands(
+            _island_rollup(
+                spark.read.option("recursiveFileLookup", "true").parquet(out)
+            )
+        ),
+        lambda spark: _islands(rel_interval_coalesce(spark, SF)),
+    ),
+    "bitmap_distinct": (
+        _tertiles,
+        _bitmap_to_files,
+        lambda spark, out: {tuple(r) for r in spark.read.parquet(out).collect()},
+        lambda spark: {
+            tuple(r)
+            for r in J.bitmap_distinct_rollup(
+                J.bitmap_words(_batch_events(spark))
+            ).collect()
+        },
+    ),
+}
+
+
+def _crash_child(job, src, out, ckpt):
+    """Child-process body: run `job` over the feed in `src` and die inside
+    micro-batch _KILL_AT (no query stop, no JVM shutdown)."""
+    from mrc_spark_jobs_pubmed_spark.session import get_session
+
+    spark = get_session(app_name="crash-child", shuffle_partitions=8)
+    start = _CRASH_JOBS[job][1]
+    stream = _feed_stream(spark, src, _batch_events(spark).schema)
+    start(stream, out, ckpt, _KILL_AT).processAllAvailable()
+
+
+@pytest.mark.parametrize("job", sorted(_CRASH_JOBS))
+def test_hard_kill_mid_batch_resumes_exactly(spark, tmp_path, job):
+    """A child process dies by os._exit inside micro-batch _KILL_AT, after
+    that batch wrote its output (or state) and before it committed. This
+    process, which never ran the query, restarts it from the same
+    checkpoint: the killed batch must re-execute (and no committed one),
+    and the final output must equal both a clean run's and the batch
+    query's. The file-sink resume tests above stop cleanly; this one
+    crosses a real crash boundary."""
+    frames, start, served, batch = _CRASH_JOBS[job]
+    src = tmp_path / "src"
+    _write_feed(src, frames(_batch_events(spark)))
+    out, ckpt = str(tmp_path / "crashed_out"), str(tmp_path / "crashed_ckpt")
+    log = tmp_path / "child.log"
+    with open(log, "w") as f:
+        child = subprocess.Popen(
+            [
+                sys.executable,
+                "-c",
+                "import sys; from tests.test_streaming import _crash_child;"
+                " _crash_child(*sys.argv[1:])",
+                job, str(src), out, ckpt,
+            ],
+            cwd=REPO, stdout=f, stderr=subprocess.STDOUT, start_new_session=True,
+        )
+        try:
+            rc = child.wait(timeout=600)
+        finally:
+            # the child's JVM is in its process group: kill what is left
+            try:
+                os.killpg(child.pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+    assert rc == 9, log.read_text()[-3000:]
+
+    schema = _batch_events(spark).schema
+    q = start(_feed_stream(spark, src, schema), out, ckpt)
+    _drain(q)
+    resumed = [p["batchId"] for p in q.recentProgress if p["numInputRows"]]
+    assert resumed and min(resumed) == _KILL_AT, resumed
+
+    clean = str(tmp_path / "clean_out")
+    _drain(start(_feed_stream(spark, src, schema), clean, str(tmp_path / "clean_ckpt")))
+    recovered = served(spark, out)
+    assert recovered == served(spark, clean) == batch(spark) and recovered
