@@ -23,26 +23,7 @@ def _rows(spark, name):
     return {tuple(r) for r in _q(spark, name).collect()}
 
 
-def test_partitioning_invariance(spark):
-    """The integer-contract queries must produce bit-identical rows
-    under a radically different shuffle layout — the property that
-    makes results diffable across cluster sizes at 100 TB."""
-    names = [
-        "rel_time_weighted_avg",
-        "rel_concurrency_sweep",
-        "rel_markov_transitions",
-        "rel_ts_correlation",
-        "rel_new_users_daily",
-        "rel_ewma_smoothing",
-        "rel_bitmap_distinct",
-        "rel_budget_allocation",
-        "graph_weighted_sssp",
-        "graph_modularity",
-        "text_textrank_keywords",
-        "rel_waterfall_bridge",
-        "rel_fifo_matching",
-        "graph_bom_explosion",
-    ]
+def _assert_partitioning_invariant(spark, names):
     base = {n: _rows(spark, n) for n in names}
     old = spark.conf.get("spark.sql.shuffle.partitions")
     try:
@@ -51,6 +32,41 @@ def test_partitioning_invariance(spark):
             assert _rows(spark, n) == base[n], n
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", old)
+
+
+def test_partitioning_invariance(spark):
+    """The integer-contract time-series/event queries must produce
+    bit-identical rows under a radically different shuffle layout — the
+    property that makes results diffable across cluster sizes at 100 TB."""
+    _assert_partitioning_invariant(
+        spark,
+        [
+            "rel_time_weighted_avg",
+            "rel_concurrency_sweep",
+            "rel_markov_transitions",
+            "rel_ts_correlation",
+            "rel_new_users_daily",
+        ],
+    )
+
+
+def test_partitioning_invariance_integer_operators(spark):
+    """The same determinism contract for the integer-arithmetic
+    smoothing, allocation, graph and matching operators."""
+    _assert_partitioning_invariant(
+        spark,
+        [
+            "rel_ewma_smoothing",
+            "rel_bitmap_distinct",
+            "rel_budget_allocation",
+            "graph_weighted_sssp",
+            "graph_modularity",
+            "text_textrank_keywords",
+            "rel_waterfall_bridge",
+            "rel_fifo_matching",
+            "graph_bom_explosion",
+        ],
+    )
 
 
 def test_zorder_key_is_invertible(spark):
